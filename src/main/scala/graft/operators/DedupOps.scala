@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.TextOps.{tokensExpr, tokensSql}
-import graft.plans.SizeGate
+import graft.plans.{Checkpoints, Fixpoint, SizeGate}
 
 /** Deduplication pipeline operators (SURVEY.md §2.4).
   *
@@ -518,7 +518,7 @@ object DedupOps {
     var shIds = Set.empty[Int]
     var built = false
     lazy val corpusSh = {
-      val (df, ids) = trackCheckpoint(
+      val (df, ids) = Checkpoints.tracked(
         shingleSetsWhere(spark, dir, col("source") === "src0"))
       shIds = ids; built = true
       df
@@ -541,7 +541,7 @@ object DedupOps {
     }
     // free only if the lazy build actually ran (the memo-hit path
     // evaluates nothing and there is nothing to free)
-    if (built) freeBlocks(spark, shIds)
+    if (built) Checkpoints.free(spark.sparkContext, shIds)
     (bands, shingles)
   }
 
@@ -571,24 +571,6 @@ object DedupOps {
 
   private val JacVerifyExpr =
     "CAST(size(array_intersect(s1, s2)) AS DOUBLE) / size(array_union(s1, s2))"
-
-  /** localCheckpoint with block bookkeeping — the shared pair behind
-    * every iterative/multi-consumer dedup op: [[trackCheckpoint]]
-    * returns the checkpointed frame plus the persistent-RDD ids it
-    * created, [[freeBlocks]] releases them once superseded. Ownership
-    * is derived from the checkpointed frame's own plan
-    * (concurrency-safe — see the Checkpoints scaladoc). */
-  private[graft] def trackCheckpoint(df: DataFrame): (DataFrame, Set[Int]) =
-    graft.plans.Checkpoints.tracked(df)
-
-  /** LAZY variant (VERDICT r7 #5): the caller's immediately-following
-    * full action materializes the blocks — checkpoint + round measure
-    * in ONE job. See the Checkpoints scaladoc contract. */
-  private[graft] def trackCheckpointLazy(df: DataFrame): (DataFrame, Set[Int]) =
-    graft.plans.Checkpoints.tracked(df, eager = false)
-
-  private[graft] def freeBlocks(spark: SparkSession, ids: Set[Int]): Unit =
-    graft.plans.Checkpoints.free(spark.sparkContext, ids)
 
   /** Verified (batch doc, corpus doc) near-dup pairs through the
     * persisted catalogs — ONE definition of the band probe + Jaccard
@@ -639,16 +621,16 @@ object DedupOps {
       // edge list ~4x per propagation round, and without the cut each
       // reference re-runs the whole band self-join + Jaccard-verify
       // subtree (the dedupComponents pairs discipline).
-      val (pairs, pairIds) = trackCheckpoint(cand
+      val (pairs, pairIds) = Checkpoints.tracked(cand
         .join(shingles.select(col("doc_id").as("id1"), col("hs").as("s1")), "id1")
         .join(shingles.select(col("doc_id").as("id2"), col("hs").as("s2")), "id2")
         .filter(expr(JacVerifyExpr) >= 0.5)
         .select("id1", "id2"))
       val touched = minLabelComponents(spark, pairs)
-      freeBlocks(spark, pairIds)
+      Checkpoints.free(spark.sparkContext, pairIds)
       val corpusDocs = Tables(spark, dir).documents
         .filter(col("source") === "src0").select(col("doc_id").as("id"))
-      val (a, ids) = trackCheckpoint(touched.unionByName(
+      val (a, ids) = Checkpoints.tracked(touched.unionByName(
         corpusDocs.join(touched.select("id"), Seq("id"), "left_anti")
           .select(col("id"), col("id").as("label"))))
       allIds = ids
@@ -670,7 +652,7 @@ object DedupOps {
     }
     // Both writes landed (or the memo hit and `all` never ran — then
     // allIds is empty); the build's blocks are no longer needed.
-    freeBlocks(spark, allIds)
+    Checkpoints.free(spark.sparkContext, allIds)
     (labelCat, sizeCat)
   }
 
@@ -698,7 +680,7 @@ object DedupOps {
     * semantic equality, no layout visible. */
   def dedupComponentsIncremental(spark: SparkSession, dir: String): DataFrame = {
     val (labelCat, sizeCat) = componentCatalogs(spark, dir)
-    val (batch, _) = trackCheckpoint(
+    val (batch, _) = Checkpoints.tracked(
       shingleSetsWhere(spark, dir, col("source") =!= "src0"))
     // EXACT-CONTENT CANONICALIZATION before any near-dup work — the
     // fix the sf10 rung forced (r11: this op measured 20.9 s → 1957 s
@@ -726,7 +708,7 @@ object DedupOps {
     // reclaims them (Bench/Verify teardown).
     val keyed = batch.select(col("doc_id"),
       md5(to_json(sort_array(col("hs")))).as("ch"))
-    val (canon, _) = trackCheckpoint(
+    val (canon, _) = Checkpoints.tracked(
       batch.withColumn("ch", md5(to_json(sort_array(col("hs")))))
         .groupBy("ch")
         .agg(min("doc_id").as("doc_id"), first("hs").as("hs"),
@@ -755,9 +737,9 @@ object DedupOps {
       .select(col("batch_id").as("id1"), col("label").as("id2"))
       .distinct()
     val (contracted, contractedIds) =
-      trackCheckpoint(bb.unionByName(bc))
+      Checkpoints.tracked(bb.unionByName(bc))
     val labels = minLabelComponents(spark, contracted)
-    freeBlocks(spark, contractedIds)
+    Checkpoints.free(spark.sparkContext, contractedIds)
     // Component ids per canon node: loop labels for edge-touched reps;
     // an untouched multi-copy ch is its own component under its rep
     // (= min member). Weights: corpus labels carry their catalog
@@ -1117,13 +1099,13 @@ object DedupOps {
     // canon feeds the pair stage AND the three readout legs; its blocks
     // stay owned for the query (lazily read at the final action — the
     // componentsIncremental discipline; session cleanup reclaims them).
-    val (canon, _) = trackCheckpoint(canonRaw)
+    val (canon, _) = Checkpoints.tracked(canonRaw)
     // Checkpoint the pairs BEFORE symmetrizing: the union references the
     // pair pipeline twice, and without the cut both branches would run
     // the whole IVF + cell-join + cosine subtree (the r2 knn diamond).
-    val (pairs, edgeIds) = trackCheckpoint(canonRepPairs(spark, dir, canon))
+    val (pairs, edgeIds) = Checkpoints.tracked(canonRepPairs(spark, dir, canon))
     val labels = minLabelComponents(spark, pairs)
-    freeBlocks(spark, edgeIds)
+    Checkpoints.free(spark.sparkContext, edgeIds)
     val touched = labels.select(col("id").as("vec_id"))
     val connected = labels
       .join(canon.select(col("vec_id").as("id"), col("n_copies")), "id")
@@ -1158,10 +1140,9 @@ object DedupOps {
     * 10.0 s). */
   private[graft] def minLabelComponents(spark: SparkSession,
       pairs: DataFrame): DataFrame = {
-    def free(ids: Set[Int]): Unit = freeBlocks(spark, ids)
     val edges = pairs.unionByName(
       pairs.select(col("id2").as("id1"), col("id1").as("id2")))
-    var (labels, labelIds) = trackCheckpoint(
+    val (labels, labelIds) = Checkpoints.tracked(
       edges.select(col("id1").as("id")).distinct()
         .select(col("id"), col("id").as("label")))
     def step(ls: DataFrame): DataFrame = {
@@ -1172,24 +1153,16 @@ object DedupOps {
         .groupBy("id").agg(min("label").as("label"))
     }
     // sum over an EMPTY labels set is SQL NULL (a clean corpus with no
-    // near-dup pairs — ADVICE r2); treat it as 0 so the loop converges
+    // near-dup pairs); treat it as 0 so the loop converges
     // immediately instead of NPE-ing, and the output is all singletons.
     def labelSum(ls: DataFrame): Long =
       Option(ls.agg(sum("label")).first().getAs[java.lang.Long](0))
         .fold(0L)(_.longValue)
-    var prevSum = labelSum(labels)
-    var converged = false
-    while (!converged) {
-      // Lazy + the convergence aggregate = one driver action per round
-      // (VERDICT r7 #5); old labels are freed only after the measure.
-      val (next, nextIds) = trackCheckpointLazy(step(step(labels)))
-      val s = labelSum(next)
-      free(labelIds)
-      labels = next; labelIds = nextIds
-      converged = s == prevSum
-      prevSum = s
-    }
-    labels
+    // No cap: the label sum strictly decreases until the fixpoint.
+    Fixpoint.run(spark.sparkContext, (labels, labelIds), Int.MaxValue)(
+      labelSum, Fixpoint.unchanged, start = Some(labelSum(labels))) {
+      (r, ls) => r.checkpoint(step(step(ls)))
+    }.state
   }
 
   /** Deterministic Luby priority for [[dedupMis]]: a 28-bit md5 prefix
@@ -1243,71 +1216,62 @@ object DedupOps {
     val (canonRaw, degenerate) = canonEmbGroups(spark, dir, expr(MisPrioExpr))
     // canon blocks stay owned for the query — read lazily by the
     // isolatedMulti/singles readout legs at the final action.
-    val (canon, _) = trackCheckpoint(canonRaw)
-    val (pairs, pairIds) = trackCheckpoint(canonRepPairs(spark, dir, canon))
+    val sc = spark.sparkContext
+    val (canon, _) = Checkpoints.tracked(canonRaw)
+    val (pairs, pairIds) = Checkpoints.tracked(canonRepPairs(spark, dir, canon))
     val edges = pairs.unionByName(
       pairs.select(col("id2").as("id1"), col("id1").as("id2")))
-    var (active, activeIds) = trackCheckpoint(
+    val (active0, activeIds) = Checkpoints.tracked(
       edges.select(col("id1").as("id")).distinct()
         .withColumn("prio", expr(MisPrioExpr)))
-    var mis: Option[DataFrame] = None
-    var misIds = Set.empty[Int]
-    var rounds = 0
-    var nActive = active.count()
-    while (nActive > 0 && rounds < MisMaxRounds) {
-      // Size-gated hints on the vertex-sized round state (VERDICT r6
-      // #1 / r6 ADVICE): post-checkpoint loop state is a LogicalRDD
-      // with unknown stats, so the planner assumes huge and shuffles
-      // the EDGE side every round without a hint (the graph_pagerank
-      // lesson). Round 1's active set is the ENTIRE touched-vertex
-      // set — exactly the round a vertex-scale corpus must NOT
-      // broadcast — so every hint gates on the driver-side nActive
-      // the loop already materializes: broadcast under the cap,
-      // co-shuffle joins beyond it (active shrinks geometrically, so
-      // later rounds re-earn the broadcast on their own count).
-      val a1 = SizeGate.hintIfSmall(
-        active.select(col("id").as("id1"), col("prio").as("p1")),
-        nActive, col("id1"))
-      val a2 = SizeGate.hintIfSmall(
-        active.select(col("id").as("id2"), col("prio").as("p2")),
-        nActive, col("id2"))
-      val eAct = edges.join(a1, "id1").join(a2, "id2")
-      val minnb = eAct.groupBy("id1").agg(min("p2").as("mn"))
-        .withColumnRenamed("id1", "id")
-      val misR = active.join(minnb, Seq("id"), "left")
-        .filter(col("mn").isNull || col("prio") < col("mn"))
-        .select("id", "prio")
-      val nbrs = eAct
-        .join(SizeGate.hintIfSmall(
-          misR.select(col("id").as("id1")), nActive, col("id1")), "id1")
-        .select(col("id2").as("id")).distinct()
-      // Lazy + the round count = one driver action (VERDICT r7 #5):
-      // the count — already needed as the loop-exit measure and the
-      // next round's gate input — materializes the blocks. It runs
-      // BEFORE the frees below (the lazy contract: nextActive's plan
-      // reads the old active blocks).
-      val (nextActive, nextIds) = trackCheckpointLazy(
-        active.join(SizeGate.hintIfSmall(misR.select("id"), nActive, col("id")),
-            Seq("id"), "left_anti")
-          .join(SizeGate.hintIfSmall(nbrs, nActive, col("id")),
-            Seq("id"), "left_anti"))
-      nActive = nextActive.count()
-      val (misAcc, accIds) = trackCheckpoint(
-        mis.fold(misR)(_.unionByName(misR)))
-      // Both consumers of the old round state are materialized above;
-      // free the superseded blocks (the minLabelComponents discipline).
-      freeBlocks(spark, activeIds)
-      freeBlocks(spark, misIds)
-      active = nextActive; activeIds = nextIds
-      mis = Some(misAcc); misIds = accIds
-      rounds += 1
+    // State: the active set and the MIS so far. The measure — the next
+    // active set's count — materializes its lazy checkpoint, exits the
+    // loop at zero, and is the next round's gate input.
+    val luby = Fixpoint.run(sc, ((active0, Option.empty[DataFrame]), activeIds), MisMaxRounds)(
+      _._1.count(), Fixpoint.zero,
+      start = Some(active0.count())) {
+      case (r, (active, mis)) =>
+        // Size-gated hints on the vertex-sized round state: post-
+        // checkpoint loop state is a LogicalRDD with unknown stats, so
+        // the planner assumes huge and shuffles the EDGE side every
+        // round without a hint (the graph_pagerank lesson). Round 1's
+        // active set is the ENTIRE touched-vertex set — exactly the
+        // round a vertex-scale corpus must NOT broadcast — so every
+        // hint gates on the driver-side active count: broadcast under
+        // the cap, co-shuffle joins beyond it (active shrinks
+        // geometrically, so later rounds re-earn the broadcast on
+        // their own count).
+        val nActive = r.last.getOrElse(0L)
+        val a1 = SizeGate.hintIfSmall(
+          active.select(col("id").as("id1"), col("prio").as("p1")),
+          nActive, col("id1"))
+        val a2 = SizeGate.hintIfSmall(
+          active.select(col("id").as("id2"), col("prio").as("p2")),
+          nActive, col("id2"))
+        val eAct = edges.join(a1, "id1").join(a2, "id2")
+        val minnb = eAct.groupBy("id1").agg(min("p2").as("mn"))
+          .withColumnRenamed("id1", "id")
+        val misR = active.join(minnb, Seq("id"), "left")
+          .filter(col("mn").isNull || col("prio") < col("mn"))
+          .select("id", "prio")
+        val nbrs = eAct
+          .join(SizeGate.hintIfSmall(
+            misR.select(col("id").as("id1")), nActive, col("id1")), "id1")
+          .select(col("id2").as("id")).distinct()
+        val nextActive = r.checkpoint(
+          active.join(SizeGate.hintIfSmall(misR.select("id"), nActive, col("id")),
+              Seq("id"), "left_anti")
+            .join(SizeGate.hintIfSmall(nbrs, nActive, col("id")),
+              Seq("id"), "left_anti"))
+        (nextActive, Some(r.checkpoint(mis.fold(misR)(_.unionByName(misR)), eager = true)))
     }
+    val (active, mis) = luby.state
     // Materialize the touched-REP list before releasing the pair
     // blocks — the anti-joins below must not re-run the IVF.
-    val (touched, _) = trackCheckpoint(
+    val (touched, _) = Checkpoints.tracked(
       edges.select(col("id1").as("vec_id")).distinct())
-    freeBlocks(spark, pairIds)
-    freeBlocks(spark, activeIds)
+    Checkpoints.free(sc, pairIds)
+    Checkpoints.free(sc, Checkpoints.owned(active))
     val misKept = mis
       .fold(spark.range(0).select(col("id")))(_.select(col("id")))
       .select(col("id").as("vec_id"), lit(true).as("was_contested"))

@@ -4,54 +4,33 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** localCheckpoint with block bookkeeping — ONE definition of the pair
-  * behind every iterative kernel (the GraphOps loops, the DedupOps
-  * components/MIS rounds): [[tracked]] returns the checkpointed frame
-  * plus the persistent-RDD ids backing it; [[free]] releases them once
-  * superseded.
+/** localCheckpoint with block bookkeeping: [[tracked]] returns the
+  * checkpointed frame plus the persistent-RDD ids backing it; [[free]]
+  * releases them once superseded. Round loops take both through
+  * [[Fixpoint]], which also holds the contract for `eager = false`.
   *
-  * Ownership derivation (VERDICT r8 #2): the ids come from the
-  * returned frame's OWN analyzed plan — `Dataset.localCheckpoint`
-  * yields a [[LogicalRDD]] leaf whose `rdd` IS the persisted
-  * internal-row RDD — not from a global getPersistentRDDs set-diff.
-  * The r1-r8 diff version assumed queries run serially per session:
-  * under concurrent queries it attributed whatever OTHER queries
-  * persisted inside the window to this call, and a later [[free]]
-  * could release a live loop's only copy of truncated-lineage data.
-  * Plan-derived ids are intrinsically per-frame, so concurrent
-  * kernels in one session cannot cross-own blocks (CheckpointsSpec
-  * races two gated kernels and asserts disjoint ownership + no
-  * premature frees).
+  * Ownership: the ids come from the returned frame's OWN analyzed plan
+  * — `Dataset.localCheckpoint` yields a [[LogicalRDD]] leaf whose `rdd`
+  * IS the persisted internal-row RDD — not from a global
+  * getPersistentRDDs set-diff, which under concurrent queries would
+  * attribute whatever OTHER queries persisted inside the window to
+  * this call, so that a later [[free]] could release a live loop's
+  * only copy of truncated-lineage data. Plan-derived ids are per-frame,
+  * so concurrent kernels in one session cannot cross-own blocks
+  * (CheckpointsSpec races two gated kernels and asserts disjoint
+  * ownership + no premature frees).
   *
-  * `eager = false` (VERDICT r7 #5) marks the plan for localCheckpoint
-  * WITHOUT the upfront materialization job. Block REGISTRATION still
-  * happens at call time (RDD.localCheckpoint persists immediately, so
-  * the id exists either way), but the blocks materialize inside the
-  * caller's NEXT action — which every loop already runs right after
-  * the checkpoint (the round count / the freeze-measure aggregate) —
-  * so checkpoint + measure ride ONE job instead of two. At cluster
-  * latencies round setup dominates short rounds; halving per-round
-  * driver actions is free latency (JobCountSpec pins the job
-  * arithmetic).
-  *
-  * LAZY CONTRACT: run a FULL action (count / aggregate — something
-  * that computes every partition) on the returned frame BEFORE freeing
-  * any upstream checkpoint blocks its plan references. An
-  * unmaterialized lazy checkpoint still computes through its parents;
-  * freeing a parent first loses the only copy of truncated-lineage
-  * data. Partial first actions (limit/take) are also fine for
-  * correctness — the end-of-job doCheckpoint fills missing partitions
-  * with a follow-up job — but forfeit the one-job win, so loop code
-  * always pairs lazy with its full measure action.
+  * `eager = false` marks the plan for localCheckpoint WITHOUT the
+  * upfront materialization job. Block REGISTRATION still happens at
+  * call time (RDD.localCheckpoint persists immediately, so the id
+  * exists either way); the blocks materialize inside the next action.
   */
 object Checkpoints {
 
   def tracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
     PlanCapture.record(df)
     val out = df.localCheckpoint(eager)
-    val ids = out.queryExecution.analyzed.collect {
-      case l: LogicalRDD => l.rdd.id
-    }.toSet
+    val ids = owned(out)
     // Deterministic for a pinned Spark version: localCheckpoint always
     // returns a single-LogicalRDD plan on 4.1.2, so a green suite run
     // means this cannot fire in production; if a Spark upgrade changes
@@ -62,6 +41,10 @@ object Checkpoints {
         "Checkpoints ownership derivation needs updating for this Spark")
     (out, ids)
   }
+
+  /** The persistent-RDD ids behind the checkpointed frames `df` reads. */
+  def owned(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
 
   def free(sc: SparkContext, ids: Set[Int]): Unit =
     ids.foreach(id =>

@@ -10,8 +10,8 @@ import org.apache.spark.sql.DataFrame
   * SizeGate tests need to PROVE the degraded path plans no
   * BroadcastExchange — this hook records each round's plan string at
   * the one chokepoint every kernel already passes through
-  * (GraphOps.checkpointed / DedupOps.trackCheckpoint), only while a
-  * spec has armed it. Disabled (the default, and always in
+  * ([[Checkpoints.tracked]], which [[Fixpoint]] rounds call too), only
+  * while a spec has armed it. Disabled (the default, and always in
   * Verify/Bench), [[record]] is a single volatile read.
   */
 object PlanCapture {

@@ -31,13 +31,20 @@ object GraftFunctions {
       build(children)
     }
 
-  /** Folds an analysis-time-constant integral expression into an Int
-    * (any FOLDABLE integral expression counts — see the
-    * graft_bootstrap_weights note below for why literal-only matching
-    * is wrong and why only UnsupportedOperationException is swallowed). */
-  private def foldIntArg(fnName: String, e: Expression): Int = {
+  /** Folds argument `pos` (1-based) of `fnName`, which must be an
+    * analysis-time constant, into an Int. "Constant" means any
+    * FOLDABLE integral expression — `CAST(50 AS BIGINT)`, `25 * 2` —
+    * not only a bare IntegerType literal; anything else fails analysis
+    * with an error naming the function and the argument's position. */
+  private def foldIntArg(fnName: String, pos: Int, e: Expression): Int = {
     val folded: Option[Int] =
       if (!e.foldable) None
+      // Foldable-but-Unevaluable expressions exist at analysis time
+      // (current_date() before ComputeCurrentTime substitutes it) —
+      // they must land on the clean AnalysisException below. ONLY
+      // UnsupportedOperationException (Unevaluable's throw): a genuine
+      // evaluation error (ANSI div-by-zero, overflowing cast) must
+      // keep ITS message, not be rebranded as a type error.
       else (try e.eval(null)
       catch { case _: UnsupportedOperationException => null }) match {
         case i: java.lang.Integer => Some(i.intValue)
@@ -47,10 +54,13 @@ object GraftFunctions {
         case _ => None
       }
     folded.getOrElse(throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "SECOND_FUNCTION_ARGUMENT_NOT_INTEGER",
+      errorClass = "UNEXPECTED_INPUT_TYPE",
       messageParameters = Map(
-        "functionName" -> (fnName +
-          " (needs a foldable integral constant in Int range)"))))
+        "paramIndex" -> pos.toString,
+        "functionName" -> fnName,
+        "requiredType" -> "foldable integral constant in Int range",
+        "inputSql" -> e.sql,
+        "inputType" -> e.dataType.sql)))
   }
 
   private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -59,7 +69,7 @@ object GraftFunctions {
       graft.functions.AnchorSort(c(0), c(1))),
     "graft_pq_min_keys" -> checked("graft_pq_min_keys", 3)(c =>
       graft.functions.PqMinKeys(c(0), c(1),
-        foldIntArg("graft_pq_min_keys", c(2)))),
+        foldIntArg("graft_pq_min_keys", 3, c(2)))),
     "graft_pq_adc" -> checked("graft_pq_adc", 3)(c =>
       graft.functions.PqAdc(c(0), c(1), c(2))),
     "graft_cell_pairs" -> checked("graft_cell_pairs", 1)(c =>
@@ -74,38 +84,10 @@ object GraftFunctions {
     "graft_tar_members" -> checked("graft_tar_members", 1)(c => graft.functions.TarMembers(c(0))),
     "graft_jaro_winkler" -> checked("graft_jaro_winkler", 2)(c => JaroWinklerSim(c(0), c(1))),
     "graft_bootstrap_weights" -> checked("graft_bootstrap_weights", 2)(c =>
-      // The replicate count must be analysis-time constant (it sizes
-      // the output array type), but "constant" means any FOLDABLE
-      // integral expression — `CAST(50 AS BIGINT)`, `25 * 2` — not a
-      // bare IntegerType literal (ADVICE r7: the literal-only match
-      // rejected integral constants with a misleading error). Fold it
-      // here and range-check into Int.
-      graft.functions.BootstrapWeights(c(0), {
-        val e = c(1)
-        val folded: Option[Int] =
-          if (!e.foldable) None
-          // Foldable-but-Unevaluable expressions exist at analysis
-          // time (current_date() before ComputeCurrentTime substitutes
-          // it) — they must land on the clean AnalysisException below.
-          // ONLY UnsupportedOperationException (Unevaluable's throw):
-          // a genuine evaluation error (ANSI div-by-zero, overflowing
-          // cast) must keep ITS message, not be rebranded as
-          // "not an integer" (second review pass, r8).
-          else (try e.eval(null)
-          catch { case _: UnsupportedOperationException => null }) match {
-            case i: java.lang.Integer => Some(i.intValue)
-            case l: java.lang.Long if l.longValue.isValidInt =>
-              Some(l.intValue)
-            case s: java.lang.Short => Some(s.intValue)
-            case b: java.lang.Byte => Some(b.intValue)
-            case _ => None
-          }
-        folded.getOrElse(throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "SECOND_FUNCTION_ARGUMENT_NOT_INTEGER",
-          messageParameters = Map(
-            "functionName" -> ("graft_bootstrap_weights (needs a " +
-              "foldable integral replicate count in Int range)"))))
-      })))
+      // The replicate count sizes the output array type, so it must be
+      // an analysis-time constant.
+      graft.functions.BootstrapWeights(c(0),
+        foldIntArg("graft_bootstrap_weights", 2, c(1)))))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

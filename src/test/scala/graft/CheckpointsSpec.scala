@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.{Checkpoints, Fixpoint}
 
 /** VERDICT r8 #2: Checkpoints ownership must be concurrency-safe.
   * The r1-r8 implementation diffed getPersistentRDDs around the
@@ -117,5 +120,85 @@ class CheckpointsSpec extends AnyFunSuite {
     def leaked = sc.getPersistentRDDs.keySet.toSet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     assert(leaked.isEmpty, s"raced kernels left stray persistent blocks: $leaked")
+  }
+
+  // Fixpoint's own contract, on a countdown fixture: every round lowers
+  // each of 0..99 by 10, floored at 0, so the values first all reach 0
+  // in round 10.
+  private def countdownInit(): (DataFrame, Set[Int]) =
+    Checkpoints.tracked(spark.range(0, 100).toDF("v"))
+  private def countdown(r: Fixpoint.Round[Long], df: DataFrame): DataFrame =
+    r.checkpoint(df.select(greatest(col("v") - 10L, lit(0L)).as("v")))
+  private def total(df: DataFrame): Long = df.agg(sum("v")).first().getLong(0)
+  private def moving(df: DataFrame): Long = df.filter(col("v") > 0).count()
+
+  /** Persistent-RDD ids registered since `before`, once async frees settle. */
+  private def leftSince(before: Set[Int], expect: Set[Int]): Set[Int] = {
+    val sc = spark.sparkContext
+    def left = sc.getPersistentRDDs.keySet.toSet -- before
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (left != expect && System.nanoTime() < deadline) Thread.sleep(20)
+    left
+  }
+
+  test("Fixpoint stops on an unchanged measure, on a zero measure, and on the cap") {
+    val sc = spark.sparkContext
+    // Unchanged: the sum first hits 0 in round 10; round 11 repeats it
+    // and confirms the freeze (the BFS / kcore / components count).
+    val unchanged = Fixpoint.run(sc, countdownInit(), 100)(total, Fixpoint.unchanged)(countdown)
+    assert(unchanged.rounds == 11, unchanged.measures)
+    assert(unchanged.measures.takeRight(2) == Vector(0L, 0L))
+    assert(total(unchanged.state) == 0L)
+    // Zero: stops in the round the residual reaches 0 (the pagerank /
+    // HITS / MIS count).
+    val zero = Fixpoint.run(sc, countdownInit(), 100)(moving, Fixpoint.zero)(countdown)
+    assert(zero.rounds == 10, zero.measures)
+    // Cap: 4 rounds, whatever the measure says.
+    val capped = Fixpoint.run(sc, countdownInit(), 4)(total, Fixpoint.unchanged)(countdown)
+    assert(capped.rounds == 4)
+    assert(capped.state.agg(max("v")).first().getLong(0) == 59L)
+    // A `start` stands in for round 0's measure: round 1's sum (4005)
+    // repeats it, so the loop stops after one round.
+    val started = Fixpoint.run(sc, countdownInit(), 100)(total, Fixpoint.unchanged,
+      start = Some(4005L))(countdown)
+    assert(started.rounds == 1, started.measures)
+    Seq(unchanged, zero, capped, started).foreach(res =>
+      Checkpoints.free(sc, Checkpoints.owned(res.state)))
+  }
+
+  test("Fixpoint with cap 0, or a start already at the stop, runs no round") {
+    val sc = spark.sparkContext
+    for ((cap, start) <- Seq((0, None), (100, Some(0L)))) {
+      val (init, ids) = countdownInit()
+      val res = Fixpoint.run(sc, (init, ids), cap)(moving, Fixpoint.zero, start) {
+        (_, _) => fail("a round ran")
+      }
+      assert(res.rounds == 0 && (res.state eq init))
+      assert(ids.subsetOf(sc.getPersistentRDDs.keySet), "initial blocks were freed")
+      Checkpoints.free(sc, ids)
+    }
+  }
+
+  test("after a Fixpoint loop only the returned state's blocks stay persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val res = Fixpoint.run(sc, countdownInit(), 100)(total, Fixpoint.unchanged)(countdown)
+    val live = Checkpoints.owned(res.state)
+    assert(live.size == 1)
+    assert(leftSince(before, live) == live, "superseded round blocks still persisted")
+    assert(total(res.state) == 0L)
+    // Kept frames accumulate: they are part of the returned state.
+    val (init, ids) = countdownInit()
+    val acc = Fixpoint.run(sc, ((init, List(init)), ids), 3)(
+      s => total(s._1), Fixpoint.unchanged) {
+      case (r, (cur, frames)) =>
+        val next = r.checkpoint(cur.select((col("v") + 1).as("v")), keep = true)
+        (next, next :: frames)
+    }
+    val kept = acc.state._2.dropRight(1).flatMap(Checkpoints.owned).toSet
+    assert(kept.size == 3)
+    assert(leftSince(before, live ++ kept) == live ++ kept,
+      "kept frames were freed, or the superseded initial frame was not")
+    Checkpoints.free(sc, live ++ kept)
   }
 }

@@ -292,13 +292,17 @@ class FunctionsSpec extends AnyFunSuite {
         .collect().map(_.getInt(0)).toSeq
       assert(n == Seq(8, 8, 8), s"$count: sizes $n")
     }
-    // Non-integral / non-foldable still fail analysis, naming the fn.
-    for (bad <- Seq("'8'", "8.5", "k")) {
+    // Non-integral / non-foldable still fail analysis, naming the fn
+    // and the position of the offending argument.
+    val bad = Seq("'8'", "8.5", "k")
+      .map(b => (s"graft_bootstrap_weights(k, $b)", "graft_bootstrap_weights", 2)) :+
+      (("graft_pq_min_keys(array(k), array(array(k)), k)", "graft_pq_min_keys", 3))
+    for ((call, fn, pos) <- bad) {
       val e = intercept[org.apache.spark.sql.AnalysisException] {
-        spark.range(1, 4).toDF("k")
-          .selectExpr(s"graft_bootstrap_weights(k, $bad)").collect()
+        spark.range(1, 4).toDF("k").selectExpr(call).collect()
       }
-      assert(e.getMessage.contains("graft_bootstrap_weights"), s"$bad: $e")
+      assert(e.getMessage.contains(fn), s"$call: $e")
+      assert(e.getMessage.contains(s"Parameter $pos of function"), s"$call: $e")
     }
   }
 }

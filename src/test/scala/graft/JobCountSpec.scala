@@ -131,4 +131,29 @@ class JobCountSpec extends AnyFunSuite {
           "per-round driver action has crept back in (VERDICT r7 #5)")
     } finally spark.conf.unset(graft.plans.SizeGate.CapConf)
   }
+
+  test("Fixpoint runs ONE job per round: the measure materializes the round's lazy checkpoint") {
+    import graft.plans.{Checkpoints, Fixpoint}
+    val sc = spark.sparkContext
+    withNoAqe {
+      var rounds = -1
+      val jobs = jobsIn("fixpoint-rounds") {
+        // Countdown fixture: 0..99 lowered by 10 per round, floored at
+        // 0 — frozen in round 10, confirmed by round 11.
+        val init = Checkpoints.tracked(spark.range(0, 100).toDF("v"))
+        val res = Fixpoint.run(sc, init, 100)(
+          df => df.agg(sum("v")).first().getLong(0), Fixpoint.unchanged) {
+          (r, df) => r.checkpoint(df.select(greatest(col("v") - 10L, lit(0L)).as("v")))
+        }
+        rounds = res.rounds
+        Checkpoints.free(sc, Checkpoints.owned(res.state))
+      }
+      assert(rounds == 11)
+      // 1 job: the eager initial checkpoint; then one measure job per
+      // round. Same ±1 band as the kcore test; a second per-round
+      // action would land at 1 + 2·rounds, far past the ceiling.
+      assert(jobs >= rounds && jobs <= rounds + 2,
+        s"$jobs jobs for $rounds rounds — expected ~${1 + rounds}")
+    }
+  }
 }
