@@ -57,11 +57,16 @@ object GraphOps {
       .getAs[java.lang.Long](0)).fold(0L)(_.longValue)
 
   /** (row count, Σ`c`) — the freeze measure of the monotone BFS and
-    * h-index loops: it repeats exactly when the state stops changing. */
-  private def countAndSum(c: String)(df: DataFrame): (Long, Long) = {
-    val m = df.agg(count(lit(1)), sum(c)).first()
-    (m.getLong(0), m.getLong(1))
-  }
+    * h-index loops: it repeats exactly when the state stops changing.
+    * One single-stage job: each partition folds its rows, the driver
+    * adds the partials (an aggregate would add a shuffle stage, i.e. a
+    * second job under AQE). An empty state measures (0, 0). */
+  private def countAndSum(c: String)(df: DataFrame): (Long, Long) =
+    df.select(col(c)).queryExecution.toRdd.mapPartitions { rows =>
+      var n, s = 0L
+      rows.foreach { r => n += 1; if (!r.isNullAt(0)) s += r.getLong(0) }
+      Iterator.single((n, s))
+    }.collect().foldLeft((0L, 0L)) { case ((n, s), (pn, ps)) => (n + pn, s + ps) }
 
   /** Loop-state / edge-layout width for every iterative kernel here,
     * derived from the co-purchase driving table's on-disk bytes
@@ -185,11 +190,13 @@ object GraphOps {
     val nV = verts.count()
     val stateFits = SizeGate.fits(verts, nV)
     // Checkpoint the edge table PRE-PARTITIONED for the gated path
-    // (localCheckpoint captures the partitioning in LogicalRDD):
+    // (Checkpoints.tracked keeps the layout in the LogicalRDD leaf; a
+    // plain localCheckpoint loses it under AQE, which reports
+    // UnknownPartitioning):
     //  - broadcast path (state fits): partition on dst — every
     //    iteration's contribution groupBy(dst) collapses onto the
-    //    materialized distribution and a round runs with ZERO
-    //    exchanges here;
+    //    materialized distribution, so the edge side of a round runs
+    //    with no exchange;
     //  - degraded path (state too big to broadcast): partition on src,
     //    the state-join key, so each round repartitions the
     //    VERTEX-SIZED rank table onto it and co-partitions — the
@@ -758,7 +765,7 @@ object GraphOps {
     * exact row count, so the gate re-decides every round — early
     * frontiers broadcast, a vertex-scale table flips to the
     * co-partitioned shuffle against the src-partitioned sym. */
-  private def bfsSweep(sc: org.apache.spark.SparkContext, sym: DataFrame,
+  private[graft] def bfsSweep(sc: org.apache.spark.SparkContext, sym: DataFrame,
       seeds: DataFrame, keys: Seq[String], nSeeds: Long): DataFrame = {
     val k = keys.map(col)
     val init = Checkpoints.tracked(seeds.select(k :+ col("v") :+ lit(0L).as("d"): _*))
@@ -1065,31 +1072,6 @@ object GraphOps {
     * 24-level unroll. */
   private[graft] val CoreMaxIter = 24
 
-  /** k-core decomposition — CORENESS per vertex (the largest k such
-    * that v survives k-core peeling) over the support-≥2 co-purchase
-    * graph, reported as a distribution: (coreness, n_vertices,
-    * min_vertex). The density diagnostic next to degree_dist: degree
-    * says how connected a hub is, coreness says how deep the densely
-    * interlinked nucleus goes (a fixed-k peel is brittle — the 3-core
-    * is empty at sf0.1 — so the full decomposition is the right query).
-    *
-    * Algorithm: iterated neighborhood H-INDEX (Lü et al., "The H-index
-    * of a network node and its relation to degree and coreness",
-    * Nature Comm. 2016): start at degree, replace each value with the
-    * h-index of the neighbors' values (largest h with ≥h neighbors
-    * ≥h); the sequence is monotone non-increasing per vertex and its
-    * fixpoint IS the core number. Monotonicity gives an exact integer
-    * freeze measure (count, Σc) — identical to the BFS loop — and
-    * makes the window tiebreak irrelevant (h is invariant to the order
-    * of equal values, so row_number over a non-unique sort is still
-    * deterministic in the result). Per round: one edge⋈values join
-    * (values vertex-sized — AQE broadcasts while small), one window
-    * partitioned by vertex, one partial-aggregated groupBy;
-    * lineage-cut per round, superseded checkpoint blocks freed. A
-    * degree-peeling loop would need a round per distinct core level
-    * REMOVED sequentially; h-index rounds run all levels concurrently
-    * and freeze in O(diameter·levels) — fewer, fatter rounds, the
-    * shape a 1000-executor cluster wants. */
   /** The support-≥2 co-purchase edge list (the kcore/label-prop/
     * triangles base graph), checkpointed. */
   private[graft] def supportEdges(spark: SparkSession, dir: String): DataFrame =
@@ -1143,6 +1125,33 @@ object GraphOps {
           .as("modularity"))
   }
 
+  /** k-core decomposition — CORENESS per vertex (the largest k such
+    * that v survives k-core peeling) over the support-≥2 co-purchase
+    * graph, reported as a distribution: (coreness, n_vertices,
+    * min_vertex). The density diagnostic next to degree_dist: degree
+    * says how connected a hub is, coreness says how deep the densely
+    * interlinked nucleus goes (a fixed-k peel is brittle — the 3-core
+    * is empty at sf0.1 — so the full decomposition is the right query).
+    *
+    * Algorithm: iterated neighborhood H-INDEX (Lü et al., "The H-index
+    * of a network node and its relation to degree and coreness",
+    * Nature Comm. 2016): start at degree, replace each value with the
+    * h-index of the neighbors' values (largest h with ≥h neighbors
+    * ≥h); the sequence is monotone non-increasing per vertex and its
+    * fixpoint IS the core number. Monotonicity gives an exact integer
+    * freeze measure (count, Σc) — identical to the BFS loop — and
+    * makes the window tiebreak irrelevant (h is invariant to the order
+    * of equal values, so row_number over a non-unique sort is still
+    * deterministic in the result). Per round: one edge⋈values join
+    * (the vertex-sized values size-gated: broadcast while they fit),
+    * one window partitioned by vertex, one groupBy — over the
+    * src-partitioned adjacency none of them shuffles, so a round is
+    * two jobs, the values' broadcast and the round its freeze measure
+    * runs; lineage-cut per round, superseded checkpoint blocks freed. A
+    * degree-peeling loop would need a round per distinct core level
+    * REMOVED sequentially; h-index rounds run all levels concurrently
+    * and freeze in O(diameter·levels) — fewer, fatter rounds, the
+    * shape a 1000-executor cluster wants. */
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
     val edges = supportEdges(spark, dir)
     val (core, _) = corenessValues(spark, edges, loopPar(spark, dir))
@@ -1160,22 +1169,27 @@ object GraphOps {
       parIn: Int = -1): (DataFrame, Int) = {
     val corePar = if (parIn > 0) parIn else spark.sparkContext.defaultParallelism
     val sc = spark.sparkContext
-    // dst-partitioned: dst is the state-join key below, so the gated
-    // large path repartitions the vertex-sized value table onto it and
-    // co-partitions (the h-index window shuffles on src either way).
-    val (adj, adjIds) = Checkpoints.tracked(
-      edges.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionByName(edges.select(col("p2").as("src"), col("p1").as("dst")))
-        .repartition(corePar, col("dst")))
+    val sym = edges.select(col("p1").as("src"), col("p2").as("dst"))
+      .unionByName(edges.select(col("p2").as("src"), col("p1").as("dst")))
+    // The degree table is the initial value table. Its measure, taken
+    // first (lazy: the same job materializes the blocks), gates the
+    // loop and picks adj's layout: the value table keeps every vertex,
+    // so its size is round-invariant.
     val init = Checkpoints.tracked(
-      adj.groupBy("src").agg(count(lit(1)).as("c"))
+      sym.groupBy("src").agg(count(lit(1)).as("c"))
         .select(col("src").as("v"), col("c")), eager = false)
-    // One upfront count gates the loop (and, lazy, materializes the
-    // blocks in the same job): the value table keeps every vertex, so
-    // its size is round-invariant.
-    val nV = init._1.count()
+    val start = countAndSum("c")(init._1)
+    val nV = start._1
+    // Broadcast path: adj on src, the key of the h-index window and
+    // groupBy, so a round (adj ⋈ broadcast values on dst) runs with no
+    // exchange. Degraded path: adj on dst, the state-join key — the
+    // value table repartitions onto it and co-partitions, and only the
+    // window's exchange on src remains.
+    val (adj, adjIds) = Checkpoints.tracked(sym.repartition(corePar,
+      col(if (SizeGate.fits(init._1, nV)) "src" else "dst")))
     val w = Window.partitionBy("src").orderBy(col("c").desc)
-    val core = Fixpoint.run(sc, init, CoreMaxIter)(countAndSum("c"), Fixpoint.unchanged) {
+    val core = Fixpoint.run(sc, init, CoreMaxIter)(
+      countAndSum("c"), Fixpoint.unchanged, Some(start)) {
       (r, cur) =>
         val nb = adj.join(SizeGate.hintIfSmall(cur, nV, col("v")),
           col("dst") === col("v"))

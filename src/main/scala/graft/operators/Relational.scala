@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.{AdaptivePar, Checkpoints}
 
 /** Relational query layer + MapReduce-core operators (SURVEY.md §2.1–2.2).
   *
@@ -1880,7 +1881,8 @@ object Relational {
     *
     * Scale posture: DISTINCT (orderkey, partkey) first — the pair join
     * is a self-join on l_orderkey, so Catalyst reuses ONE shuffled
-    * distinct subtree for both sides (ReusedExchange). Pair volume is
+    * distinct subtree for both sides (ReusedExchange), and the join
+    * runs in place over it ([[coPurchasePairCounts]]). Pair volume is
     * Σ C(items_per_order, 2) — items-per-order is bounded by the order
     * shape (single digits in TPC-H-like data), so the blow-up is a
     * small constant × lineitem, never n². The p1 < p2 guard halves it
@@ -1889,18 +1891,27 @@ object Relational {
   /** Co-purchase pair counts (p1 < p2, n_orders) — the shared
     * derivation behind [[q26BasketPairs]] and GraphOps.graphTriangles'
     * edge list: ONE definition so a change (null guard, threshold)
-    * can never diverge the two consumers. */
+    * can never diverge the two consumers. The items are hash-
+    * partitioned on l_orderkey once, before the distinct (which that
+    * layout already satisfies), so the self-join finds both sides
+    * co-partitioned. */
   private[graft] def coPurchasePairCounts(spark: SparkSession, dir: String): DataFrame =
     coPurchasePairCounts(Tables(spark, dir).lineitem
-      .select("l_orderkey", "l_partkey").distinct())
+      .select("l_orderkey", "l_partkey")
+      .repartition(col("l_orderkey")).distinct())
 
   /** Pair derivation over a caller-supplied distinct (orderkey,
-    * partkey) set — lets a multi-consumer caller (q36) pass a
-    * checkpointed items table instead of re-deriving it. */
+    * partkey) set, hash-partitioned on l_orderkey — lets a
+    * multi-consumer caller (q36) pass a checkpointed items table
+    * instead of re-deriving it. The self-join is a sort-merge join in
+    * place over that layout (no exchange): unhinted, the planner
+    * broadcasts the item set (599,935 rows at sf0.1) whenever its
+    * estimate fits, collecting and hashing it on the driver; and a
+    * forced shuffle_hash build cannot spill. */
   private[operators] def coPurchasePairCounts(items: DataFrame): DataFrame = {
     val a = items.select(col("l_orderkey"), col("l_partkey").as("p1"))
     val b = items.select(col("l_orderkey"), col("l_partkey").as("p2"))
-    a.join(b, Seq("l_orderkey"))
+    a.hint("merge").join(b, Seq("l_orderkey"))
       .filter(col("p1") < col("p2"))
       .groupBy("p1", "p2")
       .agg(count(lit(1)).as("n_orders"))
@@ -1934,12 +1945,16 @@ object Relational {
     // counts, basket total) — ReusedExchange only covers the self-
     // join's two sides, so un-cut this plans 9 shuffles and scans
     // lineitem three times. Checkpoint once, pre-partitioned on the
-    // self-join key so the join re-exchanges neither side (the
-    // pagerank LogicalRDD-keeps-partitioning move).
-    val items = Tables(spark, dir).lineitem
+    // self-join key so the join re-exchanges neither side: the layout
+    // survives the checkpoint through Checkpoints.tracked. The width
+    // is explicit because AQE coalesces a width-less repartition by
+    // size, and the self-join re-exchanged both sides of the coalesced
+    // layout (seen at sf0.001, one partition). The blocks stay for the
+    // readout; session teardown reclaims them.
+    val (items, _) = Checkpoints.tracked(Tables(spark, dir).lineitem
       .select("l_orderkey", "l_partkey").distinct()
-      .repartition(col("l_orderkey"))
-      .localCheckpoint()
+      .repartition(AdaptivePar.forTable(spark, dir, "lineitem",
+        AdaptivePar.LoopBytesPerTask), col("l_orderkey")))
     val directed = coPurchasePairCounts(items)
       .selectExpr("stack(2, p1, p2, n_orders, p2, p1, n_orders) AS (a, b, nab)")
       .filter(col("nab") >= 2)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{CheckpointLayout, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** localCheckpoint with block bookkeeping: [[tracked]] returns the
@@ -24,12 +24,23 @@ import org.apache.spark.sql.execution.LogicalRDD
   * upfront materialization job. Block REGISTRATION still happens at
   * call time (RDD.localCheckpoint persists immediately, so the id
   * exists either way); the blocks materialize inside the next action.
+  *
+  * Layout: the returned frame keeps the partitioning of the plan that
+  * produced it, so a loop that checkpoints `df.repartition(n, k)` runs
+  * its later groupBy(k) or join on k with no exchange. Spark records
+  * that partitioning only without adaptive execution: under AQE, which
+  * [[graft.GraftSession]] always enables, the checkpoint's leaf reports
+  * `UnknownPartitioning`, and every consumer would re-shuffle a
+  * pre-partitioned layout. [[CheckpointLayout.keepPartitioning]]
+  * re-attaches the finished adaptive plan's partitioning when it is
+  * known and matches the checkpointed RDD, and otherwise leaves
+  * Spark's frame as it is.
   */
 object Checkpoints {
 
   def tracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
     PlanCapture.record(df)
-    val out = df.localCheckpoint(eager)
+    val out = CheckpointLayout.keepPartitioning(df, df.localCheckpoint(eager))
     val ids = owned(out)
     // Deterministic for a pinned Spark version: localCheckpoint always
     // returns a single-LogicalRDD plan on 4.1.2, so a green suite run

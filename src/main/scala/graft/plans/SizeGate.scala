@@ -141,7 +141,10 @@ object SizeGate {
     * use this to pick the edge-table layout ONCE (broadcast path:
     * partition edges on the round's groupBy key; degraded path:
     * partition edges on the state-join key so the round co-partitions
-    * instead of reshuffling edges). */
+    * instead of reshuffling edges). The layout holds across rounds
+    * only because the edge table is checkpointed through
+    * [[Checkpoints.tracked]], which keeps the partitioning that AQE
+    * would report as unknown. */
   def fits(df: DataFrame, rows: Long): Boolean = rows <= rowCap(df)
 
   /** Concurrent build slots per executor for the SHJ middle tier's

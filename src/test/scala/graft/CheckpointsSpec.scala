@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{CheckpointLayout, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -200,5 +203,89 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(leftSince(before, live ++ kept) == live ++ kept,
       "kept frames were freed, or the superseded initial frame was not")
     Checkpoints.free(sc, live ++ kept)
+  }
+
+  // Layout under AQE (on in the shared session): a checkpoint keeps the
+  // partitioning of the plan that produced it.
+  private def leafPartitioning(df: DataFrame) =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.outputPartitioning }
+
+  test("under AQE a tracked repartition(4, k) keeps its layout: groupBy(k) plans no Exchange") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val sc = spark.sparkContext
+    val df = spark.range(0, 2000).toDF("v").withColumn("k", col("v") % 13)
+    val (out, ids) = Checkpoints.tracked(df.repartition(4, col("k")))
+    val agg = out.groupBy("k").agg(count(lit(1)).as("n"))
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"checkpointed layout re-shuffled:\n$plan")
+    assert(agg.collect().map(_.getLong(1)).sum == 2000L)
+    // Spark's own frame, without the re-attached layout, re-shuffles:
+    // the case this guards against.
+    val plain = df.repartition(4, col("k")).localCheckpoint()
+    assert(leafPartitioning(plain).contains(UnknownPartitioning(0)))
+    assert(plain.groupBy("k").count().queryExecution.executedPlan.toString.contains("Exchange"))
+    Checkpoints.free(sc, ids ++ Checkpoints.owned(plain))
+  }
+
+  test("an unknown or foreign final partitioning falls back to Spark's frame") {
+    val sc = spark.sparkContext
+    val a = spark.range(0, 100).toDF("v").repartition(4, col("v"))
+    // A union with an unpartitioned side has no known partitioning:
+    // nothing to re-attach.
+    val u = a.union(spark.range(100, 200).toDF("v"))
+    val uck = u.localCheckpoint()
+    u.queryExecution.executedPlan match {
+      case aqe: AdaptiveSparkPlanExec =>
+        assert(aqe.isFinalPlan && aqe.executedPlan.outputPartitioning
+          .isInstanceOf[UnknownPartitioning], aqe.executedPlan)
+      case other => fail(s"not an adaptive plan: $other")
+    }
+    assert(CheckpointLayout.keepPartitioning(u, uck) eq uck)
+    // A partitioning on another frame's attributes, or over another
+    // partition count, is not the leaf's: refused.
+    a.localCheckpoint() // finishes a's adaptive plan
+    val c = spark.range(0, 100).toDF("v").repartition(3, col("v"))
+    val cck = c.localCheckpoint()
+    assert(CheckpointLayout.keepPartitioning(a, cck) eq cck)
+    val d = spark.range(0, 100).toDF("v").repartition(4, col("v"))
+    val dck = d.localCheckpoint()
+    assert(CheckpointLayout.keepPartitioning(a, dck) eq dck)
+    // Its own finished plan is accepted.
+    assert(!(CheckpointLayout.keepPartitioning(d, dck) eq dck))
+    Checkpoints.free(sc, Seq(a, uck, cck, dck).flatMap(Checkpoints.owned).toSet)
+  }
+
+  test("a re-attached layout owns the same blocks as Spark's frame") {
+    val sc = spark.sparkContext
+    val df = spark.range(0, 500).toDF("v").repartition(4, col("v"))
+    val ck = df.localCheckpoint()
+    val kept = CheckpointLayout.keepPartitioning(df, ck)
+    assert(!(kept eq ck), "nothing was re-attached")
+    assert(leafPartitioning(kept).exists(_.numPartitions == 4))
+    assert(Checkpoints.owned(kept) == Checkpoints.owned(ck))
+    assert(Checkpoints.owned(kept).size == 1)
+    assert(kept.agg(sum("v")).first().getLong(0) == (0L until 500L).sum)
+    Checkpoints.free(sc, Checkpoints.owned(kept))
+  }
+
+  test("kcore's broadcast-path rounds plan no hash exchange") {
+    import graft.plans.PlanCapture
+    val session = spark
+    import session.implicits._
+    def cliqueEdges(vs: Seq[Long]) =
+      for (i <- vs.indices; j <- (i + 1) until vs.size) yield (vs(i), vs(j))
+    val edges = (cliqueEdges(1L to 5L) ++ Seq((5L, 6L), (6L, 7L))).toDF("p1", "p2")
+    PlanCapture.start()
+    val (core, rounds) = graft.operators.GraphOps.corenessValues(spark, edges)
+    val plans = PlanCapture.stop()
+    assert(rounds > 1)
+    assert(core.count() == 7L)
+    // The round plans are the captured ones that broadcast the state.
+    val roundPlans = plans.filter(_.contains("BroadcastExchange"))
+    assert(roundPlans.size == rounds, s"${roundPlans.size} round plans for $rounds rounds")
+    val shuffled = roundPlans.filter(_.contains("Exchange hashpartitioning"))
+    assert(shuffled.isEmpty,
+      s"a broadcast-path round re-shuffles:\n${shuffled.headOption.getOrElse("")}")
+    Checkpoints.free(spark.sparkContext, Checkpoints.owned(core))
   }
 }

@@ -79,6 +79,25 @@ class GraphSpec extends AnyFunSuite {
     assert(corpusIters < GraphOps.CoreMaxIter)
   }
 
+  test("degenerate graphs: no edges, one edge, a BFS with no seed") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // The (count, Σ) freeze measure of an empty state is (0, 0), not a
+    // null sum.
+    val none = Seq.empty[(Long, Long)].toDF("p1", "p2")
+    val (empty, _) = GraphOps.corenessValues(spark, none)
+    assert(empty.count() == 0L)
+    val (one, _) = GraphOps.corenessValues(spark, Seq((3L, 8L)).toDF("p1", "p2"))
+    assert(one.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(3L -> 1L, 8L -> 1L))
+    val sym = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val noSeed = Seq.empty[Long].toDF("v")
+    assert(GraphOps.bfsSweep(spark.sparkContext, sym, noSeed, Nil, 0L).count() == 0L)
+    val seeded = GraphOps.bfsSweep(spark.sparkContext, sym, Seq(1L).toDF("v"), Nil, 1L)
+    assert(seeded.select(col("v"), col("d")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 0L, 2L -> 1L))
+  }
+
   test("label propagation separates two cliques joined by a bridge") {
     import spark.implicits._
     // Two 5-cliques {1..5} and {11..15} with a single bridge 5-11:

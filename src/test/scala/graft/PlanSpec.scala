@@ -77,9 +77,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q26 basket pairs reuses ONE shuffled distinct subtree for both self-join sides") {
-    // Broadcast off = the 100 TB shuffle-join path (at test scale the
-    // distinct side broadcasts, which hides the reuse; at cluster scale
-    // the self-join shuffles and must not scan/distinct lineitem twice).
+    // Broadcast off = the 100 TB shuffle-join path. The self-join is
+    // merge-hinted, so it shuffles at every scale, test scale too: the
+    // items are exchanged on l_orderkey once and both sides read that
+    // one exchange, never scanning or distinct-ing lineitem twice.
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, "-1")
