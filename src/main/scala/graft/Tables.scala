@@ -1,12 +1,19 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * All reads go through `spark.read.parquet` so Catalyst gets native
   * predicate pushdown + column pruning on every scan; operators must
-  * never cache or collect these.
+  * never cache or collect these. Each read names its schema
+  * ([[Tables.schemaOf]]): inferring it runs a one-task Spark job over
+  * the parquet footer on every read, and only the first read of a table
+  * version needs to pay it.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   // Every query builder comes through here, so this is the one choke
@@ -28,7 +35,10 @@ final case class Tables(spark: SparkSession, dir: String) {
     if (!spark.conf.getOption(nanos).contains("true")) spark.conf.set(nanos, "true")
   }
 
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
+  }
 
   def region: DataFrame     = table("region")
   def nation: DataFrame     = table("nation")
@@ -60,3 +70,30 @@ final case class Tables(spark: SparkSession, dir: String) {
   def embeddings: DataFrame = table("embeddings")
 }
 
+object Tables {
+  private val schemas = new ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]
+
+  /** The schema Spark infers for the parquet table at `path`, cached by
+    * its qualified path. The entry holds while the table's version is
+    * unchanged: each file under the path with its length and
+    * modification time. A table rewritten in place is inferred afresh. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p).toString
+    val files = fs.listFiles(p, true)
+    val stamp = Seq.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      stamp += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val version = stamp.result()
+    schemas.get(key) match {
+      case (`version`, schema) => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        schemas.put(key, (version, schema))
+        schema
+    }
+  }
+}

@@ -2297,7 +2297,7 @@ object SimilarityOps {
     * cid-ordered codebook row (cqs: array<array<bigint>>, position =
     * cid) — the same rank the old Window row_number assigned, encoded
     * positionally. */
-  private def pqCbArr(src: DataFrame): DataFrame =
+  private[graft] def pqCbArr(src: DataFrame): DataFrame =
     src.withColumn("skey", md5(col("vec_id").cast("string")))
       .orderBy("skey").limit(16)
       .agg(expr("transform(array_sort(collect_list(struct(skey, xq))), s -> s.xq)")
@@ -2311,11 +2311,16 @@ object SimilarityOps {
 
   def embPqEncode(spark: SparkSession, dir: String): DataFrame = {
     val (emb, cbArr) = pqParts(spark, dir)
-    emb.crossJoin(broadcast(cbArr))
+    pqEncode(emb, cbArr).orderBy("vec_id")
+  }
+
+  /** (vec_id, codes, qerr) of every vector of `emb` against the codebook
+    * row `cbArr`. An empty codebook encodes nothing: the fan-out join
+    * the fused key replaced had no codebook row to pair a vector with. */
+  private[graft] def pqEncode(emb: DataFrame, cbArr: DataFrame): DataFrame =
+    emb.crossJoin(broadcast(cbArr.filter(size(col("cqs")) > 0)))
       .select(col("vec_id"), expr(s"graft_pq_min_keys(xq, cqs, $PqM)").as("ks"))
       .selectExpr("vec_id" +: pqCodesCols: _*)
-      .orderBy("vec_id")
-  }
 
   /** ADC (asymmetric distance) probe over the PQ codes: the query
     * vector stays exact while database vectors are represented by
@@ -2325,15 +2330,21 @@ object SimilarityOps {
     * per-query subspace distance table, here inlined as the broadcast
     * codebook join). */
   /** All (vec_id, adc_dist) rows pre-cut — IvfSpec draws a longer
-    * shortlist from the same frame to measure re-rank recall. */
+    * shortlist from the same frame to measure re-rank recall. A vector
+    * without a distance (no codebook entry or query term to pair its
+    * subspaces with) has no row, as in the inner-join pipeline the
+    * fused expression replaced. The distance leaves through a
+    * one-element explode so that its null filter stays above it: on a
+    * plain projection the filter would be pushed below and evaluate
+    * the fused expressions a second time. */
   private[graft] def simPqAdc(spark: SparkSession, dir: String): DataFrame = {
     val (emb, cbArr) = pqParts(spark, dir)
     val qv = emb.filter(col("vec_id") === 0).select(col("xq").as("qv"))
     emb.crossJoin(broadcast(cbArr)).crossJoin(broadcast(qv))
-      .select(col("vec_id"),
-        expr(s"graft_pq_adc(graft_pq_min_keys(xq, cqs, $PqM), cqs, qv)")
+      .select(col("vec_id"), explode(array(
+        expr(s"graft_pq_adc(graft_pq_min_keys(xq, cqs, $PqM), cqs, qv)")))
           .as("adc_dist"))
-      .filter(col("vec_id") =!= 0)
+      .filter(col("vec_id") =!= 0 && col("adc_dist").isNotNull)
   }
 
   def simPqTopk(spark: SparkSession, dir: String): DataFrame =

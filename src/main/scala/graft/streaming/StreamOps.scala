@@ -1233,10 +1233,11 @@ object StreamOps {
     val ckpt = work.resolve("ckpt").toString
     views.coalesce(1).write.parquet(srcV)
     clicks.coalesce(1).write.parquet(srcC)
-    withStreamWidth(spark, Seq(srcV, srcC)) {
-      val q = viewClickJoin(
-          spark.readStream.schema(views.schema).parquet(srcV),
-          spark.readStream.schema(clicks.schema).parquet(srcC))
+    val pairs = withStreamWidth(spark, Seq(srcV, srcC)) {
+      val pairs = viewClickJoin(
+        spark.readStream.schema(views.schema).parquet(srcV),
+        spark.readStream.schema(clicks.schema).parquet(srcC))
+      val q = pairs
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
@@ -1244,12 +1245,11 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
+      pairs
     }
-    // Explicit schema: a zero-pair corpus leaves a data-less sink that
-    // schema inference cannot read.
-    val pairSchema = org.apache.spark.sql.types.StructType(
-      views.schema.fields ++ clicks.schema.fields)
-    val counts = spark.read.schema(pairSchema).parquet(sink)
+    // A zero-pair corpus leaves a data-less sink: readSink reads it as
+    // zero rows.
+    val counts = readSink(spark, pairs, sink)
       .groupBy(col("c_user").as("user_id"), col("click_id").as("event_id"))
       .agg(count(lit(1)).as("n"))
     clicks
@@ -1819,10 +1819,10 @@ object StreamOps {
         .foreach(java.nio.file.Files.deleteIfExists)
       java.nio.file.Files.deleteIfExists(tmp)
     }
-    withStreamWidth(spark, Seq(src.toString)) {
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.toString)
-      val q = hourlyAggWatermarked(stream)
+    val out = withStreamWidth(spark, Seq(src.toString)) {
+      val out = hourlyAggWatermarked(spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src.toString))
+      val q = out
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt.toString)
@@ -1830,6 +1830,7 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
+      out
     }
     val nBatches = {
       import scala.jdk.CollectionConverters._
@@ -1840,7 +1841,7 @@ object StreamOps {
     require(nBatches >= 5,
       s"multi-batch replay collapsed to $nBatches batches — " +
         "maxFilesPerTrigger=1 staging is not splitting")
-    spark.read.parquet(sink)
+    readSink(spark, out, sink)
       .filter(col("event_type") =!= "__flush_mb__")
       .orderBy("hour", "event_type")
   }
@@ -1926,10 +1927,10 @@ object StreamOps {
         finally ls.close()
       }
     }
+    val out = hourlyAggWatermarked(spark.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", "1").parquet(src.toString))
     def run(): (java.util.UUID, Int) = {
-      val q = hourlyAggWatermarked(
-          spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src.toString))
+      val q = out
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt.toString)
@@ -1956,7 +1957,7 @@ object StreamOps {
     require(n2 >= n1 + 2,
       s"restart gate: run 2 added only ${n2 - n1} committed batches " +
         s"($n1 -> $n2) — the post-restart range is not disjoint")
-    spark.read.parquet(sink)
+    readSink(spark, out, sink)
       .filter(col("event_type") =!= "__flush_rs__")
       .orderBy("hour", "event_type")
   }
@@ -2075,9 +2076,9 @@ object StreamOps {
         frame.schema)
         .coalesce(1).write.mode("append").parquet(src)
     }
-    withStreamWidth(spark, Seq(src)) {
-      val stream = spark.readStream.schema(frame.schema).parquet(src)
-      val q = pipeline(stream)
+    val out = withStreamWidth(spark, Seq(src)) {
+      val out = pipeline(spark.readStream.schema(frame.schema).parquet(src))
+      val q = out
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
@@ -2085,9 +2086,19 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
+      out
     }
-    spark.read.parquet(sink)
+    readSink(spark, out, sink)
   }
+
+  /** The parquet sink at `sink`, read with the schema of the streaming
+    * frame `out` that wrote it: no footer-inference job, and an empty
+    * sink reads as zero rows instead of failing inference. Every field
+    * is nullable, as an inferred schema's is. */
+  private def readSink(spark: org.apache.spark.sql.SparkSession,
+      out: DataFrame, sink: String): DataFrame =
+    spark.read.schema(org.apache.spark.sql.types.StructType(
+      out.schema.fields.map(_.copy(nullable = true)))).parquet(sink)
 
   /** Reap graft stream work dirs left by DEAD processes: the per-pid
     * keying that makes concurrent JVMs safe (ADVICE r9) also means a

@@ -288,4 +288,32 @@ class CheckpointsSpec extends AnyFunSuite {
       s"a broadcast-path round re-shuffles:\n${shuffled.headOption.getOrElse("")}")
     Checkpoints.free(spark.sparkContext, Checkpoints.owned(core))
   }
+
+  test("freeing a checkpoint logs no locally-checkpointed warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("graft-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      val (df, ids) = Checkpoints.tracked(spark.range(10).toDF("v"))
+      assert(df.count() == 10)
+      Checkpoints.free(spark.sparkContext, ids)
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val noise = seen.asScala.filter(_.contains("was locally checkpointed"))
+    assert(noise.isEmpty, noise.mkString("\n"))
+  }
 }

@@ -289,6 +289,31 @@ class IvfSpec extends AnyFunSuite {
     info(s"sweep: candidates=${cands.toSeq} recall_ppm=${recalls.toSeq}")
   }
 
+  test("PQ ADC: a vector without a distance has no row, as in the inner-join pipeline") {
+    // Degenerate corpus: 20 vectors, two of them with no embedding. The
+    // fan-out join the fused expressions replaced found no codebook
+    // entry for their subspaces and dropped them.
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_adc_")
+    try {
+      Tables(spark, sf).embeddings.filter(col("vec_id") < 20)
+        .withColumn("embedding",
+          when(col("vec_id").isin(3, 7), lit(null)).otherwise(col("embedding")))
+        .write.parquet(s"$dir/embeddings.parquet")
+      val rows = SimilarityOps.simPqAdc(spark, dir.toString).collect()
+      assert(rows.map(_.getLong(0)).toSet == (1L until 20L).toSet -- Set(3L, 7L))
+      assert(rows.forall(!_.isNullAt(1)), "a row without a distance survived")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("PQ encode against an empty codebook yields no row") {
+    val emb = Tables(spark, sf).embeddings.filter(col("vec_id") < 20)
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT))")
+          .as("xq"))
+    assert(SimilarityOps.pqEncode(emb, SimilarityOps.pqCbArr(emb)).count() == 20)
+    assert(SimilarityOps.pqEncode(emb, SimilarityOps.pqCbArr(emb.limit(0))).count() == 0)
+  }
+
   test("residual PQ encodes with strictly lower total error than flat PQ") {
     // The reason FAISS IVF-PQ encodes residuals: subtracting the
     // coarse centroid shrinks the ball the 16-entry fine codebook must

@@ -156,4 +156,24 @@ class JobCountSpec extends AnyFunSuite {
         s"$jobs jobs for $rounds rounds — expected ~${1 + rounds}")
     }
   }
+
+  test("a second read of a table names its cached schema and starts no job") {
+    Tables(spark, TestSpark.sf).lineitem
+    val jobs = jobsIn("tables-second-read")(Tables(spark, TestSpark.sf).lineitem)
+    assert(jobs == 0, s"a repeated table read started $jobs jobs: its schema was inferred again")
+  }
+
+  test("a table rewritten at the same path is read with its new schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables_")
+    try {
+      val path = s"$dir/t.parquet"
+      spark.range(3).toDF("a").write.parquet(path)
+      assert(Tables(spark, dir.toString).table("t").columns.toSeq == Seq("a"))
+      spark.range(3).selectExpr("id AS b", "CAST(id * 10 AS STRING) AS c")
+        .write.mode("overwrite").parquet(path)
+      val t = Tables(spark, dir.toString).table("t")
+      assert(t.columns.toSeq == Seq("b", "c"))
+      assert(t.orderBy("b").collect().map(_.getString(1)).toSeq == Seq("0", "10", "20"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

@@ -1019,4 +1019,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.size > 100)
     assert(streamed == batch)
   }
+
+  test("a rerun of a gated stream reuses its generated code: no class is compiled again") {
+    // Each streaming query runs on a clone of the session. Spark's code
+    // cache is keyed by classloader, so a clone that gets a classloader
+    // of its own recompiles every class of the stream on every run.
+    def run(): Unit = SparkEntry.queries("stream_hourly_agg")(spark, sf).collect()
+    run()
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    run()
+    val again = compiles.getCount - before
+    assert(again == 0, s"the second run compiled $again generated classes")
+  }
 }
