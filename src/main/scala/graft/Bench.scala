@@ -125,6 +125,22 @@ object Bench {
       .replaceAll(
         "(Location: [\\w$.]+\\(\\d+ paths?\\))\\[(?:(?!, [A-Z]\\w*: )[^\\n])*\\]?",
         "$1[<path>]")
+      // The same fixed-width cut hits DataFilters: Spark keeps 97
+      // characters of a long value plus '...'
+      // (spark.sql.maxMetadataStringLength = 100), and it cuts BEFORE
+      // the '#<id>' strip above, so the digit count of the ids moves
+      // the cut point across boots on unchanged code (ev_range_join:
+      // 'isnotnull(uni...' vs 'isnotnull(unix_m...'). A cut value — one
+      // ending in '...' at its field boundary; a whole list ends in ']'
+      // — becomes one fixed token. Nothing is lost: the Filter node
+      // above the scan prints the same predicates in full. Not so for
+      // PartitionFilters (Spark drops partition-only predicates from
+      // that Filter), so a cut PartitionFilters value keeps its text.
+      // (Not covered: a value whose raw length sits at the width, cut
+      // in one boot and whole in the next.)
+      .replaceAll(
+        "DataFilters: \\[(?:(?!, [A-Z]\\w*: )[^\\n])*?\\.\\.\\.(?=, [A-Z]\\w*: |\\n|$)",
+        "DataFilters: [<cut>]")
       .replaceAll("Statistics\\([^)]*\\)", "<stats>")
       .replaceAll("\\[id=[^\\]]*\\]", "")
       // Multi-distinct aggregates: RewriteDistinctAggregates groups the
@@ -254,20 +270,36 @@ object Bench {
   /** Core-count window guard (VERDICT r12 #3b): history lines carried
     * no cpus field, so the driver's 8-core scaling boot joined the
     * 32-core official window and BENCH_OFFICIAL became a median over
-    * mixed-core boots. Every line now records `"cpus":N` and both
-    * median windows filter on it. A LEGACY (cpus-less, pre-r13) line
+    * mixed-core boots. Every line now records `"cpus":N` and every
+    * history window filters on it: both median windows and the plan
+    * window ([[historyPlans]]) — `GraftSession` sets the shuffle width
+    * to the core count, so plan text, and with it every plan sha,
+    * differs between core counts. A LEGACY (cpus-less, pre-r13) line
     * stays joinable — excluding it would blank the stall trigger and
     * the live-artifact consistency check until the first new-format
     * boot — but the hole is bounded by construction: legacy lines can
     * never match an r13+ src hash (this very change edits src/main),
     * so post-r13 OFFICIAL windows contain only cpus-stamped,
     * same-cpus boots. */
-  private def cpusMatches(line: String, cpus: Int): Boolean = {
-    val cpusRe = "\"cpus\":(\\d+)".r
-    cpusRe.findFirstMatchIn(line) match {
-      case Some(m) => m.group(1) == cpus.toString
-      case None => true // legacy pre-r13 line (see above)
-    }
+  private def cpusMatches(line: String, cpus: Int): Boolean =
+    lineCpus(line).forall(_ == cpus) // None: legacy pre-r13 line (see above)
+
+  /** A history line's core count; None for a legacy (cpus-less) line. */
+  private def lineCpus(line: String): Option[Int] =
+    "\"cpus\":(\\d+)".r.findFirstMatchIn(line).flatMap(_.group(1).toIntOption)
+
+  /** The lines of the history file at `path` whose sf is `sfDir`,
+    * oldest → newest — the one reader behind every history window. A
+    * missing or unreadable file reads as no lines, never as a throw. */
+  private def historyLines(sfDir: String, path: String): List[String] = {
+    val sfRe = "\"sf\":\"([^\"]*)\"".r
+    val lines =
+      try {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(path)).asScala.toList
+      } catch { case _: java.io.IOException => Nil }
+    lines.filter(l => sfRe.findFirstMatchIn(l).exists(_.group(1) == sfDir))
   }
 
   /** Per-query medians over the trailing [[MedianWindow]] same-sf,
@@ -278,16 +310,8 @@ object Bench {
   private[graft] def trailingMedians(sfDir: String, cpus: Int,
       path: String = HistoryPath): Map[String, Double] = {
     val qRe = "\"queries\":\\{([^}]*)\\}".r
-    val sfRe = "\"sf\":\"([^\"]*)\"".r
     val pairRe = "\"([^\"]+)\":(-?[0-9][0-9.eE+-]*)".r
-    val lines =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(path)).asScala.toList
-      } catch { case _: java.io.IOException => Nil }
-    val matching = lines
-      .filter(l => sfRe.findFirstMatchIn(l).exists(_.group(1) == sfDir))
+    val matching = historyLines(sfDir, path)
       .filter(cpusMatches(_, cpus))
       .takeRight(MedianWindow)
     val perQuery = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -414,19 +438,11 @@ object Bench {
       src: String, cpus: Int, path: String = HistoryPath)
       : (Map[String, Double], List[Double], Map[String, Int]) = {
     val qRe = "\"queries\":\\{([^}]*)\\}".r
-    val sfRe = "\"sf\":\"([^\"]*)\"".r
     val headRe = "\"head\":\"([^\"]*)\"".r
     val srcRe = "\"src\":\"([^\"]*)\"".r
     val totRe = "\"value\":(-?[0-9][0-9.eE+-]*)".r
     val pairRe = "\"([^\"]+)\":(-?[0-9][0-9.eE+-]*)".r
-    val lines =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(path)).asScala.toList
-      } catch { case _: java.io.IOException => Nil }
-    val matching = lines
-      .filter(l => sfRe.findFirstMatchIn(l).exists(_.group(1) == sfDir))
+    val matching = historyLines(sfDir, path)
       .filter { l =>
         srcRe.findFirstMatchIn(l).map(_.group(1)) match {
           case Some(ls) => ls == src && src != "unknown"
@@ -463,31 +479,37 @@ object Bench {
     (medians, totals, counts)
   }
 
-  /** The "plans" maps of every matching-sf line in [[HistoryPath]],
-    * oldest → newest — the cross-round sha-stability source (r10,
-    * VERDICT r9 wrong #2: with the normalizer now fixed, sha equality
-    * across rounds is meaningful again and is asserted as a standing
-    * artifact check in BenchArtifactSpec). Lines without a plans field
+  /** The "plans" maps of every same-sf, same-cpus line in
+    * [[HistoryPath]], oldest → newest — the cross-round sha-stability
+    * source (r10, VERDICT r9 wrong #2: with the normalizer now fixed,
+    * sha equality across rounds is meaningful again and is asserted as
+    * a standing artifact check in BenchArtifactSpec) and the window
+    * the variant capture in [[main]] checks against. Keyed on the core
+    * count like the median windows (see [[cpusMatches]]): the shuffle
+    * width is in the plan text, so boots of one source tree at 32 and
+    * at 8 cores share almost no shas. Lines without a plans field
     * (pre-r9 rounds) are skipped; parse failures degrade to skip,
     * never to a throw — the trailingMedians contract. */
-  private[graft] def historyPlans(sfDir: String,
+  private[graft] def historyPlans(sfDir: String, cpus: Int,
       path: String = HistoryPath): List[Map[String, String]] = {
     val pRe = "\"plans\":\\{([^}]*)\\}".r
-    val sfRe = "\"sf\":\"([^\"]*)\"".r
     val pairRe = "\"([^\"]+)\":\"([0-9a-f]{12})\"".r
-    val lines =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(path)).asScala.toList
-      } catch { case _: java.io.IOException => Nil }
-    lines
-      .filter(l => sfRe.findFirstMatchIn(l).exists(_.group(1) == sfDir))
+    historyLines(sfDir, path)
+      .filter(cpusMatches(_, cpus))
       .flatMap(l => pRe.findFirstMatchIn(l).map(m =>
         pairRe.findAllMatchIn(m.group(1))
           .map(p => p.group(1) -> p.group(2)).toMap))
       .filter(_.nonEmpty)
   }
+
+  /** The core count of the newest same-sf line that carries plans —
+    * the window [[historyPlans]] compares that line against. -1 when
+    * that line is legacy (cpus-less) or there is none: -1 matches no
+    * cpus-stamped line, so that window holds legacy lines only. */
+  private[graft] def newestPlansCpus(sfDir: String,
+      path: String = HistoryPath): Int =
+    historyLines(sfDir, path).filter(_.contains("\"plans\":{\""))
+      .lastOption.flatMap(lineCpus).getOrElse(-1)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -631,7 +653,7 @@ object Bench {
     // append every never-seen variant to PLAN_VARIANTS.jsonl so the
     // flip documents itself the moment it happens.
     if (args.isEmpty) {
-      val window = historyPlans(sfDir).takeRight(MedianWindow)
+      val window = historyPlans(sfDir, cpus).takeRight(MedianWindow)
       val seen: Map[String, Set[String]] = window.flatMap(_.toSeq)
         .groupBy(_._1).map { case (q, kv) => q -> kv.map(_._2).toSet }
       // Already-dumped (q, sha) variants don't re-dump (ADVICE r11):

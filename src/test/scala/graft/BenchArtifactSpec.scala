@@ -145,6 +145,47 @@ class BenchArtifactSpec extends AnyFunSuite {
       "a gid-free sort order was over-normalized away")
   }
 
+  test("planSha absorbs where FileScan cuts a long filter list (DataFilters truncation leak class)") {
+    // FileScan shortens each metadata value with Spark's own rule —
+    // StringUtils.abbreviate at spark.sql.maxMetadataStringLength (100):
+    // 97 characters plus '...' — BEFORE planNorm strips '#<id>', so the
+    // digit count of the ids moves the cut point. The same predicates
+    // rendered with 2-digit and 5-digit ids (the ev_range_join events
+    // scan) must hash equal once cut.
+    def filters(id: Int) =
+      s"[isnotnull(event_type#$id), (event_type#$id = click), " +
+        s"isnotnull(user_id#${id + 1}L), isnotnull((unix_micros(ts#${id + 2}) div 86400000000)), " +
+        s"isnotnull(unix_micros(ts#${id + 2})), isnotnull(event_id#${id + 3}L)]"
+    def scan(id: Int, dataFilters: String) =
+      s"FileScan parquet [event_id#${id + 3}L,ts#${id + 2},user_id#${id + 1}L,event_type#$id] " +
+        s"Batched: true, DataFilters: $dataFilters, Format: Parquet, " +
+        "Location: InMemoryFileIndex(1 paths)[file:/data/sf0.1/events.parquet], " +
+        "PartitionFilters: [], PushedFilters: [IsNotNull(event_type), EqualTo(event_type,click)], " +
+        "ReadSchema: struct<event_id:bigint,ts:timestamp,user_id:bigint,event_type:string>"
+    def cut(v: String) = org.apache.commons.lang3.StringUtils.abbreviate(v, 100)
+    val (narrow, wide) = (cut(filters(12)), cut(filters(48213)))
+    assert(narrow.length == 100 && narrow.endsWith("...") && wide.length == 100)
+    // The fixture really straddles a cut point: without ids the two
+    // shortened values still differ.
+    assert(narrow.replaceAll("#\\d+", "#") != wide.replaceAll("#\\d+", "#"))
+    assert(Bench.planSha(scan(12, narrow)) == Bench.planSha(scan(48213, wide)),
+      "the id digit count leaked into the fingerprint through the DataFilters cut")
+    // A cut PartitionFilters value keeps its text: Spark drops
+    // partition-only predicates from the Filter above the scan, so
+    // this value is their only record in the plan.
+    val part = "FileScan parquet [a#1] Batched: true, DataFilters: [], Format: Parquet, " +
+      s"Location: InMemoryFileIndex(1 paths)[file:/data/t], PartitionFilters: $narrow, " +
+      "PushedFilters: [], ReadSchema: struct<a:int>"
+    assert(Bench.planNorm(part).contains("PartitionFilters: [isnotnull(event_type#), "))
+    // A whole (unshortened) list keeps its content: a different
+    // predicate still moves the sha.
+    val whole = scan(12, "[isnotnull(event_type#12), (event_type#12 = click)]")
+    assert(Bench.planSha(whole) !=
+      Bench.planSha(whole.replace("= click)]", "= view)]")),
+      "an unshortened DataFilters value was over-normalized away")
+    assert(Bench.planNorm(whole).contains("DataFilters: [isnotnull(event_type#), (event_type# = click)]"))
+  }
+
   test("planSha of a live query is identical across two builds in one session") {
     def build() = graft.operators.Relational.q01PricingSummary(spark, sf)
     val s1 = Bench.planSha(build().queryExecution.executedPlan.toString)
@@ -215,6 +256,43 @@ class BenchArtifactSpec extends AnyFunSuite {
       } catch { case _: java.io.IOException => Nil }
     if (live.exists(_.contains("\"sf\":\"/root/testdata/sf0.1\"")))
       assert(Bench.trailingMedians("/root/testdata/sf0.1", 32).nonEmpty)
+  }
+
+  test("historyPlans: sf and core-count scoping, legacy lines join any window") {
+    // Own fixture, as for trailingMedians. The shuffle width is in the
+    // plan text, so a cpus-stamped line may join only a same-cpus plan
+    // window; a legacy (cpus-less) line joins any; a line without
+    // plans is skipped.
+    def line(cpus: Option[Int], sf: String, plans: Option[String]) = {
+      val c = cpus.fold("")(n => s""","cpus":$n""")
+      val p = plans.fold("")(sha => s""","plans":{"qa":"$sha"}""")
+      s"""{"metric":"total","value":1,"unit":"sec"$c,"queries":{"qa":1.0},"failed":0$p,"sf":"$sf"}"""
+    }
+    val (a32, b8, legacy, other) =
+      ("aaaaaaaaaaaa", "bbbbbbbbbbbb", "cccccccccccc", "dddddddddddd")
+    val f = java.io.File.createTempFile("bench_hist_plans", ".jsonl")
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath,
+      Seq(
+        line(None, "/sf0.1", Some(legacy)),
+        line(Some(32), "/sf0.1", Some(a32)),
+        line(Some(8), "/sf0.1", Some(b8)),
+        line(Some(32), "/sf0.1", None),
+        line(Some(32), "/sf0.001", Some(other)))
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(Bench.historyPlans("/sf0.1", 32, f.getPath) ==
+      List(Map("qa" -> legacy), Map("qa" -> a32)),
+      "cpus=32 plan window must see the 32-core and legacy lines only")
+    assert(Bench.historyPlans("/sf0.1", 8, f.getPath) ==
+      List(Map("qa" -> legacy), Map("qa" -> b8)),
+      "cpus=8 plan window must see the 8-core and legacy lines only")
+    assert(Bench.historyPlans("/sf0.1", 4, f.getPath) == List(Map("qa" -> legacy)))
+    assert(Bench.historyPlans("/sf0.001", 32, f.getPath) == List(Map("qa" -> other)))
+    assert(Bench.historyPlans("/sf0.1", 32, "/nonexistent/h.jsonl").isEmpty)
+    // The spec's window is read at the newest plans-carrying line's core
+    // count (here the 8-core line; the later 32-core line has no plans).
+    assert(Bench.newestPlansCpus("/sf0.1", f.getPath) == 8)
+    assert(Bench.newestPlansCpus("/sf0.1", "/nonexistent/h.jsonl") == -1)
   }
 
   test("officialMedian: same-source window, per-query stall absorption, artifact consistency (r12)") {
@@ -360,12 +438,19 @@ class BenchArtifactSpec extends AnyFunSuite {
     // Membership is checked against the TRAILING WINDOW (the medians
     // window), not only the immediately-previous line: AQE's final
     // executed plan is load-adaptive by design (a contended boot can
-    // legitimately split/coalesce differently — observed r10:
-    // ev_range_join replanned once inside a 1.4×-inflated boot), so a
-    // sha REVERTING to a recently-seen value is not a regression. A
-    // sha nobody in the window has seen still fails — that is the
-    // signature of both a plan regression and a new leak class.
-    val hist = Bench.historyPlans("/root/testdata/sf0.1")
+    // legitimately split/coalesce differently), so a sha REVERTING to
+    // a recently-seen value is not a regression. A sha nobody in the
+    // window has seen still fails — that is the signature of both a
+    // plan regression and a new leak class. (The ev_range_join flip
+    // seen since r10, d11a192f34cc <-> 4d0aa75c366b, was not a replan:
+    // it was FileScan's DataFilters cut moving with the id digit
+    // count, a leak planNorm now closes.)
+    // "Consecutive" means consecutive at ONE core count: the shuffle
+    // width is in the plan text, so the window is read at the core
+    // count of the newest plans-carrying line (legacy cpus-less lines
+    // join any window; see Bench.cpusMatches).
+    val sfDir = "/root/testdata/sf0.1"
+    val hist = Bench.historyPlans(sfDir, Bench.newestPlansCpus(sfDir))
     assume(hist.size >= 2, "needs two plans-carrying sf0.1 history lines")
     val cur = hist.last
     val window = hist.dropRight(1).takeRight(5)
