@@ -249,11 +249,12 @@ object Bench {
   }
 
   /** md5/12 of [[planNorm]] — the `plans` artifact fingerprint. */
-  private[graft] def planSha(plan: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(planNorm(plan).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
+  private[graft] def planSha(plan: String): String = sha12(planNorm(plan))
+
+  /** md5/12 of an already-normalized plan text. */
+  private def sha12(normText: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(normText.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
   /** History file: one full-run bench line per row, appended by every
     * full (no-args) run. The committed seed carries the r5-r7 official
@@ -277,10 +278,12 @@ object Bench {
     * differs between core counts. A LEGACY (cpus-less, pre-r13) line
     * stays joinable — excluding it would blank the stall trigger and
     * the live-artifact consistency check until the first new-format
-    * boot — but the hole is bounded by construction: legacy lines can
-    * never match an r13+ src hash (this very change edits src/main),
-    * so post-r13 OFFICIAL windows contain only cpus-stamped,
-    * same-cpus boots. */
+    * boot. In [[officialMedian]] the src hash bounds that hole: a
+    * legacy line can never match an r13+ src hash, so post-r13
+    * OFFICIAL windows hold only cpus-stamped, same-cpus boots.
+    * [[trailingMedians]] has no src filter, so there a legacy line can
+    * sit in a stamped core count's stall window until 5 newer stamped
+    * boots of that sf push it out. */
   private def cpusMatches(line: String, cpus: Int): Boolean =
     lineCpus(line).forall(_ == cpus) // None: legacy pre-r13 line (see above)
 
@@ -304,36 +307,36 @@ object Bench {
 
   /** Per-query medians over the trailing [[MedianWindow]] same-sf,
     * same-cpus runs in [[HistoryPath]] — the baseline the stall
-    * trigger compares against. Regex-parsed: the rows are this main's
-    * own single-line format. A missing/foreign/corrupt file degrades
+    * trigger compares against. A missing/foreign/corrupt file degrades
     * to "no median" (no retry), never to a throw. */
   private[graft] def trailingMedians(sfDir: String, cpus: Int,
-      path: String = HistoryPath): Map[String, Double] = {
+      path: String = HistoryPath): Map[String, Double] =
+    windowMedians(historyLines(sfDir, path)
+      .filter(cpusMatches(_, cpus))
+      .takeRight(MedianWindow))._1
+
+  /** Per-query medians over the `"queries"` maps of the window `lines`,
+    * and per query its count of valid samples — the parse both median
+    * windows share. Regex-parsed: the rows are this main's own
+    * single-line format. A failed run (`-1`) is no sample; so is a
+    * mangled token (torn concurrent append, hand edit — the pair
+    * charset admits shapes a double parse rejects, e.g. '3.612.007'),
+    * which must degrade, not kill the bench before a single query runs
+    * (review finding, r8). A query seen only as failures has count 0
+    * and no median. */
+  private def windowMedians(lines: List[String])
+      : (Map[String, Double], Map[String, Int]) = {
     val qRe = "\"queries\":\\{([^}]*)\\}".r
     val pairRe = "\"([^\"]+)\":(-?[0-9][0-9.eE+-]*)".r
-    val matching = historyLines(sfDir, path)
-      .filter(cpusMatches(_, cpus))
-      .takeRight(MedianWindow)
-    val perQuery = scala.collection.mutable.Map.empty[String, List[Double]]
-    for (l <- matching; m <- qRe.findFirstMatchIn(l);
-         p <- pairRe.findAllMatchIn(m.group(1))) {
-      // A mangled token (torn concurrent append, hand edit) must
-      // degrade to "no sample", not kill the bench before a single
-      // query runs (review finding, r8) — the pairRe charset admits
-      // shapes toDouble rejects, e.g. '3.612.007'.
-      val t =
-        try p.group(2).toDouble
-        catch { case _: NumberFormatException => -1.0 }
-      if (t >= 0) perQuery.updateWith(p.group(1))(
-        old => Some(t :: old.getOrElse(Nil)))
+    val samples = for (l <- lines; m <- qRe.findFirstMatchIn(l).toList;
+         p <- pairRe.findAllMatchIn(m.group(1)))
+      yield p.group(1) -> p.group(2).toDoubleOption.filter(_ >= 0)
+    val valid = samples.groupMap(_._1)(_._2).map { case (q, ts) => q -> ts.flatten.sorted }
+    val medians = valid.collect { case (q, s) if s.nonEmpty =>
+      q -> (if (s.size % 2 == 1) s(s.size / 2)
+        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2)
     }
-    perQuery.map { case (q, ts) =>
-      val s = ts.sorted
-      val mid =
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      q -> mid
-    }.toMap
+    (medians, valid.map { case (q, s) => q -> s.size })
   }
 
   /** Best-effort git HEAD commit (sha12) read straight from .git —
@@ -428,7 +431,7 @@ object Bench {
     * boots, and one failing in all of them silently vanishes — the
     * counts make a shrunken basis detectable; a query seen only as
     * failures appears with count 0). Same degrade-don't-throw parsing
-    * contract as [[trailingMedians]]; an "unknown" key matches
+    * contract as [[windowMedians]]; an "unknown" key matches
     * nothing — mixing unknown-provenance boots into an official
     * window would defeat the same-code guarantee. Window membership
     * additionally requires a matching core count (see [[cpusMatches]]
@@ -437,11 +440,9 @@ object Bench {
   private[graft] def officialMedian(sfDir: String, head: String,
       src: String, cpus: Int, path: String = HistoryPath)
       : (Map[String, Double], List[Double], Map[String, Int]) = {
-    val qRe = "\"queries\":\\{([^}]*)\\}".r
     val headRe = "\"head\":\"([^\"]*)\"".r
     val srcRe = "\"src\":\"([^\"]*)\"".r
     val totRe = "\"value\":(-?[0-9][0-9.eE+-]*)".r
-    val pairRe = "\"([^\"]+)\":(-?[0-9][0-9.eE+-]*)".r
     val matching = historyLines(sfDir, path)
       .filter { l =>
         srcRe.findFirstMatchIn(l).map(_.group(1)) match {
@@ -453,29 +454,11 @@ object Bench {
       }
       .filter(cpusMatches(_, cpus))
       .takeRight(MedianWindow)
-    val perQuery = scala.collection.mutable.Map.empty[String, List[Double]]
-    val seenQ = scala.collection.mutable.Set.empty[String]
-    for (l <- matching; m <- qRe.findFirstMatchIn(l);
-         p <- pairRe.findAllMatchIn(m.group(1))) {
-      val t = try p.group(2).toDouble
-        catch { case _: NumberFormatException => -1.0 }
-      seenQ += p.group(1)
-      if (t >= 0) perQuery.updateWith(p.group(1))(
-        old => Some(t :: old.getOrElse(Nil)))
-    }
-    val medians = perQuery.map { case (q, ts) =>
-      val s = ts.sorted
-      val mid =
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      q -> mid
-    }.toMap
+    val (medians, counts) = windowMedians(matching)
     val totals = matching.flatMap(l =>
       totRe.findFirstMatchIn(l).flatMap(m =>
         try Some(m.group(1).toDouble)
         catch { case _: NumberFormatException => None }))
-    val counts = seenQ.iterator
-      .map(q => q -> perQuery.get(q).fold(0)(_.size)).toMap
     (medians, totals, counts)
   }
 
@@ -512,6 +495,9 @@ object Bench {
       .lastOption.flatMap(lineCpus).getOrElse(-1)
 
   def main(args: Array[String]): Unit = {
+    // Optional args narrow the run to the named queries (local
+    // iteration); checked before any session starts.
+    val names = SparkEntry.selectQueries(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to every core: the brief's bench contract is local[32] on
     // the 32-thread driver machine, and an unset SPARK_GRAFT_CPUS must
@@ -585,9 +571,7 @@ object Bench {
         val sha =
           try {
             val norm = planNorm(df.queryExecution.executedPlan.toString)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            Some((md.digest(norm.getBytes("UTF-8"))
-              .map("%02x".format(_)).mkString.take(12), norm))
+            Some((sha12(norm), norm))
           }
           catch { case scala.util.control.NonFatal(_) => None }
         (Right(t), sha)
@@ -604,10 +588,6 @@ object Bench {
     Seq("q02_filter_project", "mr_wordcount", "sim_topk_cosine")
       .foreach(materialize)
 
-    // Optional args narrow the run to the named queries (local iteration).
-    val names =
-      if (args.nonEmpty) args.toSeq.filter(SparkEntry.queries.contains).sorted
-      else SparkEntry.queries.keys.toSeq.sorted
     val medians = trailingMedians(sfDir, cpus)
     val results = names.map { n =>
       val (r, sha) = materialize(n)

@@ -19,18 +19,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
+    val names = SparkEntry.selectQueries(args.drop(2).toSeq)
     java.nio.file.Files.createDirectories(outDir)
-    val names =
-      if (args.length > 2) {
-        val asked = args.drop(2).toSeq
-        val unknown = asked.filterNot(SparkEntry.queries.contains)
-        // A typo must fail loudly (ADVICE r9): a silently-missing .plan
-        // file makes the two-boot diff vacuously pass for that query.
-        require(unknown.isEmpty,
-          s"unknown query name(s): ${unknown.mkString(", ")} — " +
-            "check SparkEntry.queries keys")
-        asked.sorted
-      } else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = GraftSession.local(cpus, "graft-plandump")

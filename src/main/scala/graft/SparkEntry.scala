@@ -24,6 +24,19 @@ object SparkEntry {
       EventOps.queries ++ GraphOps.queries ++ SkewOps.queries ++
       graft.sources.Formats.queries ++ graft.streaming.StreamOps.queries
 
+  /** The queries a dev main runs: the `asked` names, sorted, or every
+    * registered query when none is asked. A typo must fail loudly
+    * (ADVICE r9): a silently dropped name runs a smaller set than
+    * asked — an empty bench run, or a missing .plan file that makes
+    * PlanDump's two-boot diff vacuously pass for that query. */
+  private[graft] def selectQueries(asked: Seq[String]): Seq[String] = {
+    val unknown = asked.filterNot(queries.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")} — " +
+        "check SparkEntry.queries keys")
+    (if (asked.isEmpty) queries.keys.toSeq else asked).sorted
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

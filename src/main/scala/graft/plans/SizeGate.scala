@@ -31,8 +31,10 @@ import org.apache.spark.sql.functions.broadcast
   *    state is returned unhinted (used where the state side already
   *    carries the right hash partitioning, e.g. a groupBy output).
   *
-  * Past the SHJ middle tier the hint is dropped entirely and the
-  * planner's sort-merge join takes over — SpillSpec drives that
+  * Past the SHJ middle tier the state is marked a [[SpillableRun]] and
+  * an inner join with it plans as a [[BlockSortMergeJoinExec]], a
+  * sort-merge join whose spilled runs cost memory per block of
+  * streamed rows, not per row — SpillSpec drives that
   * regime to completion with measured nonzero memory+disk spilled
   * bytes (task metrics), so "degrade" is proven to mean SPILL,
   * never an unspillable build dying (VERDICT r8 #5).
@@ -197,7 +199,9 @@ object SizeGate {
       // the TWO per-round sorts an SMJ would pay on vertex-sized data
       // (measured sf0.1 cap=0: the 12-kernel degraded loop
       // 136.8 → 123.7 s). Past the bound the hint is dropped and the
-      // join degrades once more — to sort-merge, which spills.
+      // join degrades once more — to sort-merge, which spills: the
+      // marked state plans as a BlockSortMergeJoinExec, which replays
+      // a spilled run once per block of streamed rows (see there).
       // Partition count stays `par` in every tier so the
       // pre-partitioned edge checkpoint co-partitions throughout.
       // Unset spark.executor.cores does NOT mean one slot: standalone
@@ -216,6 +220,7 @@ object SizeGate {
           sc.getConf.getOption("spark.executor.cores"), par)
       val shjBound = sliceRows(df) * (par.toLong / math.max(1, slotsPerExec))
         .max(1L)
-      if (rows <= shjBound) rp.hint("shuffle_hash") else rp
+      if (rows <= shjBound) rp.hint("shuffle_hash")
+      else org.apache.spark.sql.SpillableRuns.mark(rp)
     }
 }

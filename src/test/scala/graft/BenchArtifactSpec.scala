@@ -195,6 +195,15 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(s1 == s2, "same code, same session: fingerprints diverged")
   }
 
+  test("Bench fails loudly on an unknown query name, before a session starts") {
+    // A typo used to be dropped silently: the run then timed fewer
+    // queries than asked, or none, and printed that as a result.
+    val e = intercept[IllegalArgumentException](
+      Bench.main(Array("q01_pricing_summary", "no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
+    assert(!spark.sparkContext.isStopped, "Bench stopped the session")
+  }
+
   test("trailingMedians: sf scoping, stall-resistant median, corrupt-token degrade") {
     // Own fixture, NOT the live BENCH_HISTORY.jsonl — the product
     // appends a line per full bench run, so asserting on the live

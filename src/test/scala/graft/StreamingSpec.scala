@@ -1020,6 +1020,16 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("a gated stream reaps the work dir a dead process left behind") {
+    // No live process has pid 9999999999: it is above any kernel's
+    // pid_max, so ProcessHandle.of finds nothing.
+    val dead = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      "graft_stream_zz_" + "0123456789abcdef" * 2 + "_p9999999999")
+    java.nio.file.Files.createDirectories(dead.resolve("ckpt"))
+    SparkEntry.queries("stream_transitions")(spark, sf).collect()
+    assert(!java.nio.file.Files.exists(dead), s"$dead was not reaped")
+  }
+
   test("a rerun of a gated stream reuses its generated code: no class is compiled again") {
     // Each streaming query runs on a clone of the session. Spark's code
     // cache is keyed by classloader, so a clone that gets a classloader
