@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional extra args narrow the dump to the named queries.
-    val only = args.drop(2).toSet
+    // Optional extra args narrow the dump to the named queries; an
+    // unknown name fails here, before a session starts.
+    val only = SparkEntry.selectQueries(args.drop(2).toSeq).toSet
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = GraftSession.local(cpus, "graft-verify")
@@ -16,7 +17,7 @@ object Verify {
     graft.operators.SimilarityOps.oracleDirHint.set(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

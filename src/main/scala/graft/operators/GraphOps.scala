@@ -483,8 +483,8 @@ object GraphOps {
     * output is the top-20 parts by triangle participation — the local
     * clustering signal a recommender / community detector starts from.
     *
-    * Scale posture: the edge list derives from ONE distinct+self-join
-    * on l_orderkey (bounded per-order fan-out, see q26BasketPairs) and
+    * Scale posture: the edge list derives from ONE sorted pass per
+    * order (bounded per-order fan-out, see coPurchasePairCounts) and
     * is localCheckpoint'ed because the triangle enumeration joins it
     * THREE times — without the cut the pair-derivation shuffle would
     * run three times (the minhash r2 lesson). Edges are oriented
@@ -641,7 +641,7 @@ object GraphOps {
   def graphDegreeDist(spark: SparkSession, dir: String): DataFrame = {
     // Checkpoint before symmetrizing: the union references the pair
     // pipeline twice (the dedupComponents edge lesson — un-cut, the
-    // whole distinct+self-join subtree ran once per branch and the
+    // whole pair-derivation subtree ran once per branch and the
     // plan tripped the PlanAuditSpec shuffle ceiling).
     val edges = Relational.coPurchasePairCounts(spark, dir)
       .filter(col("n_orders") >= 2)

@@ -1877,46 +1877,83 @@ object Relational {
       .limit(20)
   }
 
-  /** Market-basket co-occurrence: the top part pairs ordered together.
-    *
-    * Scale posture: DISTINCT (orderkey, partkey) first — the pair join
-    * is a self-join on l_orderkey, so Catalyst reuses ONE shuffled
-    * distinct subtree for both sides (ReusedExchange), and the join
-    * runs in place over it ([[coPurchasePairCounts]]). Pair volume is
-    * Σ C(items_per_order, 2) — items-per-order is bounded by the order
-    * shape (single digits in TPC-H-like data), so the blow-up is a
-    * small constant × lineitem, never n². The p1 < p2 guard halves it
-    * and canonicalizes pair identity; top-20 is TakeOrderedAndProject
-    * over the aggregated pairs. */
-  /** Co-purchase pair counts (p1 < p2, n_orders) — the shared
-    * derivation behind [[q26BasketPairs]] and GraphOps.graphTriangles'
-    * edge list: ONE definition so a change (null guard, threshold)
-    * can never diverge the two consumers. The items are hash-
-    * partitioned on l_orderkey once, before the distinct (which that
-    * layout already satisfies), so the self-join finds both sides
-    * co-partitioned. */
+  /** Co-purchase pair counts (p1 < p2, n_orders = the orders holding
+    * both parts): the one derivation behind [[q26BasketPairs]], q36,
+    * GraphPin and the graph family's edge list. The line items are
+    * hash-partitioned on l_orderkey once, so every order's lines sit in
+    * one partition, and the items overload below walks each order
+    * once. */
   private[graft] def coPurchasePairCounts(spark: SparkSession, dir: String): DataFrame =
     coPurchasePairCounts(Tables(spark, dir).lineitem
       .select("l_orderkey", "l_partkey")
-      .repartition(col("l_orderkey")).distinct())
+      .repartition(col("l_orderkey")))
 
-  /** Pair derivation over a caller-supplied distinct (orderkey,
-    * partkey) set, hash-partitioned on l_orderkey — lets a
-    * multi-consumer caller (q36) pass a checkpointed items table
-    * instead of re-deriving it. The self-join is a sort-merge join in
-    * place over that layout (no exchange): unhinted, the planner
-    * broadcasts the item set (599,935 rows at sf0.1) whenever its
-    * estimate fits, collecting and hashing it on the driver; and a
-    * forced shuffle_hash build cannot spill. */
+  /** Pair counts over caller-supplied (orderkey, partkey) rows clustered
+    * on l_orderkey (duplicates allowed) — lets q36 pass its checkpointed
+    * items instead of re-deriving them. The "pairs" pattern of MapReduce
+    * co-occurrence counting: each partition is sorted on (order, part),
+    * so an order is one run with its parts in increasing order, and one
+    * pass over the run emits (p1, p2) for every p1 < p2 among its
+    * distinct parts ([[BasketPairs]]). No join and no distinct: pair
+    * volume is Σ C(distinct parts per order, 2), bounded by the order
+    * shape, never n². Rows with a null key are dropped, as the oracle's
+    * equi-join on the order and its p1 < p2 condition drop them. */
   private[operators] def coPurchasePairCounts(items: DataFrame): DataFrame = {
-    val a = items.select(col("l_orderkey"), col("l_partkey").as("p1"))
-    val b = items.select(col("l_orderkey"), col("l_partkey").as("p2"))
-    a.hint("merge").join(b, Seq("l_orderkey"))
-      .filter(col("p1") < col("p2"))
+    import items.sparkSession.implicits._
+    items.select("l_orderkey", "l_partkey")
+      .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
+      .sortWithinPartitions("l_orderkey", "l_partkey")
+      .as[(Long, Long)]
+      .mapPartitions(rows => new BasketPairs(rows))
+      .toDF("p1", "p2")
       .groupBy("p1", "p2")
       .agg(count(lit(1)).as("n_orders"))
   }
 
+  /** (p1, p2) for every p1 < p2 of each order's distinct parts, over
+    * (orderkey, partkey) rows sorted on both: an order's parts are
+    * buffered once (equal neighbours skipped), then its pairs stream
+    * out before the next order is read. */
+  private final class BasketPairs(rows: Iterator[(Long, Long)])
+      extends Iterator[(Long, Long)] {
+    private var parts = new Array[Long](16)
+    private var n = 0          // distinct parts of the current order
+    private var i = 0          // next pair is (parts(i), parts(j))
+    private var j = 1
+    private var ahead: (Long, Long) = if (rows.hasNext) rows.next() else null
+
+    private def nextOrder(): Unit = {
+      val order = ahead._1
+      n = 0
+      while (ahead != null && ahead._1 == order) {
+        if (n == 0 || parts(n - 1) != ahead._2) {
+          if (n == parts.length) parts = java.util.Arrays.copyOf(parts, 2 * n)
+          parts(n) = ahead._2
+          n += 1
+        }
+        ahead = if (rows.hasNext) rows.next() else null
+      }
+      i = 0
+      j = 1
+    }
+
+    def hasNext: Boolean = {
+      while (i >= n - 1 && ahead != null) nextOrder()
+      i < n - 1
+    }
+
+    def next(): (Long, Long) = {
+      if (!hasNext) throw new NoSuchElementException("no more pairs")
+      val pair = (parts(i), parts(j))
+      j += 1
+      if (j == n) { i += 1; j = i + 1 }
+      pair
+    }
+  }
+
+  /** Market-basket co-occurrence: the top part pairs ordered together
+    * ([[coPurchasePairCounts]]); the top-20 is TakeOrderedAndProject
+    * over the aggregated pairs. */
   def q26BasketPairs(spark: SparkSession, dir: String): DataFrame =
     coPurchasePairCounts(spark, dir)
       .orderBy(desc("n_orders"), col("p1"), col("p2"))
@@ -1936,20 +1973,19 @@ object Relational {
     * no-FP-until-the-last-op rule. The lift sort is therefore on
     * bit-identical doubles; (a, b) breaks genuine ties.
     *
-    * Scale: the distinct-items subtree is shared (ReusedExchange) by
-    * the pair self-join, the item counts, and the basket total; pair
-    * volume is Σ C(items/order, 2) — order-shape-bounded, never n²;
-    * the top-20 is TakeOrderedAndProject. */
+    * Scale: the distinct items are checkpointed once, partitioned on
+    * l_orderkey, and read by all three consumers (pair counts, item
+    * counts, basket total); pair volume is Σ C(items/order, 2) —
+    * order-shape-bounded, never n²; the top-20 is
+    * TakeOrderedAndProject. */
   def q36AssocRules(spark: SparkSession, dir: String): DataFrame = {
-    // THREE consumers of the distinct-items set (pair self-join, item
-    // counts, basket total) — ReusedExchange only covers the self-
-    // join's two sides, so un-cut this plans 9 shuffles and scans
-    // lineitem three times. Checkpoint once, pre-partitioned on the
-    // self-join key so the join re-exchanges neither side: the layout
-    // survives the checkpoint through Checkpoints.tracked. The width
-    // is explicit because AQE coalesces a width-less repartition by
-    // size, and the self-join re-exchanged both sides of the coalesced
-    // layout (seen at sf0.001, one partition). The blocks stay for the
+    // Three consumers of the distinct-items set: un-cut, each would
+    // scan and aggregate lineitem again. Checkpoint once, partitioned
+    // on l_orderkey so the pair count walks each order in place (the
+    // layout survives the checkpoint through Checkpoints.tracked). The
+    // width is explicit: AQE would coalesce a width-less repartition by
+    // the items' size, and the pair count, whose output is several
+    // times larger, would run in fewer tasks. The blocks stay for the
     // readout; session teardown reclaims them.
     val (items, _) = Checkpoints.tracked(Tables(spark, dir).lineitem
       .select("l_orderkey", "l_partkey").distinct()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -2303,11 +2303,18 @@ object SimilarityOps {
       .agg(expr("transform(array_sort(collect_list(struct(skey, xq))), s -> s.xq)")
         .as("cqs"))
 
-  /** codes / qerr readout from the fused key array (k % 16 = cid,
-    * k div 16 = exact subspace distance — [[embPqEncode]]'s contract). */
+  /** The fused keys of `xq` against the codebook `cqs` (ks), and the
+    * codebook's size (k), for [[pqCodesCols]]. */
+  private def pqKeyCols: Seq[Column] = Seq(
+    expr(s"graft_pq_min_keys(xq, cqs, $PqM)").as("ks"), size(col("cqs")).as("k"))
+
+  /** codes / qerr readout from the fused key array `ks` of a codebook
+    * of `k` entries (key % k = cid, key div k = exact subspace distance
+    * — [[embPqEncode]]'s contract). k is 16 unless the corpus has fewer
+    * vectors. */
   private def pqCodesCols: Seq[String] = Seq(
-    s"concat_ws('-', ${(0 until PqM).map(i => s"element_at(ks, ${i + 1}) % 16").mkString(", ")}) AS codes",
-    s"${(0 until PqM).map(i => s"(element_at(ks, ${i + 1}) div 16)").mkString(" + ")} AS qerr")
+    s"concat_ws('-', ${(0 until PqM).map(i => s"element_at(ks, ${i + 1}) % k").mkString(", ")}) AS codes",
+    s"${(0 until PqM).map(i => s"(element_at(ks, ${i + 1}) div k)").mkString(" + ")} AS qerr")
 
   def embPqEncode(spark: SparkSession, dir: String): DataFrame = {
     val (emb, cbArr) = pqParts(spark, dir)
@@ -2319,7 +2326,7 @@ object SimilarityOps {
     * the fused key replaced had no codebook row to pair a vector with. */
   private[graft] def pqEncode(emb: DataFrame, cbArr: DataFrame): DataFrame =
     emb.crossJoin(broadcast(cbArr.filter(size(col("cqs")) > 0)))
-      .select(col("vec_id"), expr(s"graft_pq_min_keys(xq, cqs, $PqM)").as("ks"))
+      .select(col("vec_id") +: pqKeyCols: _*)
       .selectExpr("vec_id" +: pqCodesCols: _*)
 
   /** ADC (asymmetric distance) probe over the PQ codes: the query
@@ -2380,12 +2387,13 @@ object SimilarityOps {
   def embPqResidual(spark: SparkSession, dir: String): DataFrame = {
     val (emb, cbArr) = pqParts(spark, dir)
     // Coarse assignment = the first 4 codebook entries, one 64-dim
-    // subspace: the fused key dist·4 + ccid (multiplier = |ccqs| = 4),
-    // computed map-side instead of the old 4× fan-out + groupBy(min).
+    // subspace: the fused key dist·|ccqs| + ccid (|ccqs| = 4 unless
+    // the corpus has fewer vectors), computed map-side instead of the
+    // old 4× fan-out + groupBy(min).
     val coarseArr = cbArr.select(expr("slice(cqs, 1, 4)").as("ccqs"))
     val assign = emb.crossJoin(broadcast(coarseArr))
       .select(col("vec_id"),
-        (expr("element_at(graft_pq_min_keys(xq, ccqs, 1), 1)") % 4).as("cell"))
+        (expr("element_at(graft_pq_min_keys(xq, ccqs, 1), 1)") % size(col("ccqs"))).as("cell"))
     val withCell = emb.join(assign, "vec_id").localCheckpoint()
     // Cell MEANS, not the anchor vectors (one Lloyd half-step): the
     // residual ball is the within-cell spread around the mean — the
@@ -2416,8 +2424,7 @@ object SimilarityOps {
     // is a plain column read here.
     val fcbArr = pqCbArr(res)
     res.crossJoin(broadcast(fcbArr))
-      .select(col("vec_id"), col("cell"),
-        expr(s"graft_pq_min_keys(xq, cqs, $PqM)").as("ks"))
+      .select(col("vec_id") +: col("cell") +: pqKeyCols: _*)
       .selectExpr(Seq("vec_id", "cell") ++ pqCodesCols: _*)
       .orderBy("vec_id")
   }

@@ -204,6 +204,19 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(!spark.sparkContext.isStopped, "Bench stopped the session")
   }
 
+  test("Verify fails loudly on an unknown query name, before a session starts") {
+    // A typo used to be dropped silently: the dump then held no result
+    // for the name and the correctness check it fed had nothing to say.
+    val out = java.nio.file.Files.createTempDirectory("graft_verify_")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Verify.main(Array(sf, out.toString, "q01_pricing_summary", "no_such_query")))
+      assert(e.getMessage.contains("no_such_query"))
+      assert(out.toFile.list().isEmpty, "Verify wrote output for a run it should refuse")
+      assert(!spark.sparkContext.isStopped, "Verify stopped the session")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+  }
+
   test("trailingMedians: sf scoping, stall-resistant median, corrupt-token degrade") {
     // Own fixture, NOT the live BENCH_HISTORY.jsonl — the product
     // appends a line per full bench run, so asserting on the live

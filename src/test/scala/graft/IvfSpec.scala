@@ -314,6 +314,32 @@ class IvfSpec extends AnyFunSuite {
     assert(SimilarityOps.pqEncode(emb, SimilarityOps.pqCbArr(emb.limit(0))).count() == 0)
   }
 
+  test("PQ codes and qerr against a codebook of fewer than 16 entries equal a brute-force argmin") {
+    // A corpus of 5 vectors makes a 5-entry codebook: the fused key is
+    // dist·5 + cid, so the readout must decode by 5, not by 16.
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def vecs(ids: Range) = ids.map(i => (i.toLong, Array.fill(16)(rnd.nextInt(101) - 50L)))
+    val cbSrc = vecs(0 until 5)
+    val probes = vecs(10 until 18) :+ (99L -> cbSrc(2)._2) // one equals an entry
+    val cb = cbSrc.sortBy { case (id, _) =>
+      java.security.MessageDigest.getInstance("MD5").digest(id.toString.getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString
+    }.map(_._2)
+    def sq(d: Long) = d * d
+    val want = probes.map { case (id, x) =>
+      val best = (0 until 8).map { s =>
+        cb.indices.map(c => ((2 * s until 2 * s + 2).map(i => sq(x(i) - cb(c)(i))).sum, c)).min
+      }
+      id -> (best.map(_._2).mkString("-"), best.map(_._1).sum)
+    }.toMap
+    val emb = probes.map { case (id, x) => (id, x.toSeq) }.toDF("vec_id", "xq")
+    val cbArr = SimilarityOps.pqCbArr(cbSrc.map { case (id, x) => (id, x.toSeq) }.toDF("vec_id", "xq"))
+    val got = SimilarityOps.pqEncode(emb, cbArr).collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(got == want)
+  }
+
   test("residual PQ encodes with strictly lower total error than flat PQ") {
     // The reason FAISS IVF-PQ encodes residuals: subtracting the
     // coarse centroid shrinks the ball the 16-entry fine codebook must

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
@@ -11,6 +15,8 @@ import graft.operators.Relational
   */
 class PlanSpec extends AnyFunSuite {
   import TestSpark.{sf, spark}
+
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   private def plan(df: org.apache.spark.sql.DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
@@ -76,22 +82,27 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("q26 basket pairs reuses ONE shuffled distinct subtree for both self-join sides") {
-    // Broadcast off = the 100 TB shuffle-join path. The self-join is
-    // merge-hinted, so it shuffles at every scale, test scale too: the
-    // items are exchanged on l_orderkey once and both sides read that
-    // one exchange, never scanning or distinct-ing lineitem twice.
+  test("q26 basket pairs scans lineitem once, exchanges it once on l_orderkey, joins nothing") {
+    // Broadcast off = the 100 TB shuffle path. The pairs come from one
+    // sorted pass per order over items hash-partitioned on l_orderkey:
+    // one scan, one exchange on the order key, and no join at all.
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, "-1")
     try {
-      // AQE performs exchange reuse when query stages materialize, so
-      // the evidence lives in the executed adaptive plan, not the
-      // static explain.
+      // AQE plans stage by stage, so the evidence lives in the
+      // executed adaptive plan, not the static explain.
       val df = Relational.q26BasketPairs(spark, sf)
       df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage"), p)
+      val p = df.queryExecution.executedPlan
+      val scans = Aqe.collect(p) { case s: FileSourceScanExec => s.relation.location.rootPaths }
+      assert(scans.size == 1 && scans.head.forall(_.getName == "lineitem.parquet"), p)
+      val byOrder = Aqe.collect(p) {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.toString.startsWith("hashpartitioning(l_orderkey") => e
+      }
+      assert(byOrder.size == 1, p)
+      assert(Aqe.collect(p) { case j: BaseJoinExec => j }.isEmpty, p)
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
