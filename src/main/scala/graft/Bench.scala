@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.StandardOpenOption.{APPEND, CREATE}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -49,7 +55,7 @@ object Bench {
     * stats annotations, per-boot catalog/table/lambda identities) so
     * unchanged code renders identically across boots and query
     * orderings. Exposed separately from [[planSha]] so the two-boot
-    * stability check ([[PlanDump]]) can DIFF the text when a sha
+    * stability check ([[dumpPlans]]) can DIFF the text when a sha
     * mismatches — r8's panel-only check missed token classes precisely
     * because shas alone don't say WHAT varied. */
   private[graft] def planNorm(plan: String): String = {
@@ -252,7 +258,7 @@ object Bench {
   private[graft] def planSha(plan: String): String = sha12(planNorm(plan))
 
   /** md5/12 of an already-normalized plan text. */
-  private def sha12(normText: String): String =
+  private[graft] def sha12(normText: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(normText.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
@@ -297,11 +303,8 @@ object Bench {
   private def historyLines(sfDir: String, path: String): List[String] = {
     val sfRe = "\"sf\":\"([^\"]*)\"".r
     val lines =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(path)).asScala.toList
-      } catch { case _: java.io.IOException => Nil }
+      try Files.readAllLines(Paths.get(path)).asScala.toList
+      catch { case _: java.io.IOException => Nil }
     lines.filter(l => sfRe.findFirstMatchIn(l).exists(_.group(1) == sfDir))
   }
 
@@ -352,38 +355,32 @@ object Bench {
     * don't reset it. */
   private[graft] def gitHead(gitDir: String = ".git"): String =
     try {
-      var p = java.nio.file.Paths.get(gitDir)
+      var p = Paths.get(gitDir)
       // Worktree / submodule checkout: .git is a file 'gitdir: <path>'.
-      if (java.nio.file.Files.isRegularFile(p)) {
-        val ind = java.nio.file.Files.readString(p).trim
+      if (Files.isRegularFile(p)) {
+        val ind = Files.readString(p).trim
         if (!ind.startsWith("gitdir:")) return "unknown"
-        p = p.toAbsolutePath.getParent
-          .resolve(ind.drop(7).trim).normalize()
+        p = p.toAbsolutePath.getParent.resolve(ind.drop(7).trim).normalize()
       }
       // Worktree gitdirs keep HEAD locally but share refs/packed-refs
       // through the commondir pointer.
       val commonFile = p.resolve("commondir")
       val refBase =
-        if (java.nio.file.Files.isRegularFile(commonFile))
-          p.resolve(java.nio.file.Files.readString(commonFile).trim)
-            .normalize()
+        if (Files.isRegularFile(commonFile))
+          p.resolve(Files.readString(commonFile).trim).normalize()
         else p
-      val s = java.nio.file.Files.readString(p.resolve("HEAD")).trim
+      val s = Files.readString(p.resolve("HEAD")).trim
       val sha =
         if (s.startsWith("ref: ")) {
           val ref = s.drop(5).trim
           val loose = refBase.resolve(ref)
-          if (java.nio.file.Files.isRegularFile(loose))
-            java.nio.file.Files.readString(loose).trim
-          else {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.readAllLines(refBase.resolve("packed-refs"))
-              .asScala.find(_.endsWith(" " + ref))
-              .map(_.takeWhile(_ != ' ')).getOrElse("")
-          }
+          if (Files.isRegularFile(loose)) Files.readString(loose).trim
+          else Files.readAllLines(refBase.resolve("packed-refs"))
+            .asScala.find(_.endsWith(" " + ref))
+            .map(_.takeWhile(_ != ' ')).getOrElse("")
         } else s
       if (sha.matches("[0-9a-f]{40}")) sha.take(12) else "unknown"
-    } catch { case scala.util.control.NonFatal(_) => "unknown" }
+    } catch { case NonFatal(_) => "unknown" }
 
   /** md5/12 over the PLAN-RELEVANT source tree (src/main, sorted
     * relative paths + file bytes) — the official-median window key
@@ -398,22 +395,21 @@ object Bench {
     * line — no cross-state pooling). */
   private[graft] def srcTreeHash(root: String = "src/main"): String =
     try {
-      import scala.jdk.CollectionConverters._
-      val base = java.nio.file.Paths.get(root)
-      if (!java.nio.file.Files.isDirectory(base)) return "unknown"
+      val base = Paths.get(root)
+      if (!Files.isDirectory(base)) return "unknown"
       val md = java.security.MessageDigest.getInstance("MD5")
-      val files = java.nio.file.Files.walk(base).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
+      val files = Files.walk(base).iterator().asScala
+        .filter(Files.isRegularFile(_))
         .map(f => base.relativize(f).toString -> f)
         .toSeq.sortBy(_._1)
       files.foreach { case (rel, f) =>
         md.update(rel.getBytes("UTF-8"))
         md.update(0.toByte)
-        md.update(java.nio.file.Files.readAllBytes(f))
+        md.update(Files.readAllBytes(f))
         md.update(0.toByte)
       }
       md.digest().map("%02x".format(_)).mkString.take(12)
-    } catch { case scala.util.control.NonFatal(_) => "unknown" }
+    } catch { case NonFatal(_) => "unknown" }
 
   /** OFFICIAL per-query numbers (VERDICT r10 #2): the r10 official
     * boot was a 1.2×-contention-inflated outlier adjudicated only by
@@ -494,16 +490,92 @@ object Bench {
     historyLines(sfDir, path).filter(_.contains("\"plans\":{\""))
       .lastOption.flatMap(lineCpus).getOrElse(-1)
 
+  /** Run first in every boot, untimed: they absorb session init,
+    * codegen and parquet footer reads for each table family (fact scan,
+    * text+regexp+explode, vector math), so per-query numbers attribute
+    * work, not first-touch JIT. */
+  private val WarmUp = Seq("q02_filter_project", "mr_wordcount", "sim_topk_cosine")
+
+  /** Runs query `name` once through the `noop` sink after an untimed
+    * teardown. Returns its seconds and normalized executedPlan text, or
+    * the message of what stopped it. */
+  private def materialize(spark: SparkSession, sfDir: String, name: String)
+      : Either[String, (Double, String)] = {
+    // Untimed cross-query state teardown (VERDICT r2 finding #1: the
+    // driver's 52-query run showed ~3x aggregate inflation vs isolated
+    // runs). Three layers, all deterministic rather than waiting on
+    // the async ContextCleaner:
+    //  1. unpersist every persistent RDD synchronously — frees the
+    //     localCheckpoint blocks queries leave behind (components,
+    //     minhash) instead of letting them squeeze unified execution
+    //     memory for the rest of the suite;
+    //  2. drop any cached relations (none expected — defensive);
+    //  3. GC so the cleaner also reaps shuffle files and broadcast
+    //     blocks whose owners just became unreachable.
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+    System.gc()
+    val t0 = System.nanoTime()
+    try {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
+      val t = (System.nanoTime() - t0) / 1e9
+      // Fingerprint AFTER the timer stops: executedPlan access is
+      // planning only (the iterative kernels' loops already ran at
+      // construction above — nothing re-executes here).
+      Right((t, planNorm(df.queryExecution.executedPlan.toString)))
+    } catch {
+      case e: Throwable =>
+        Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
+    }
+  }
+
+  /** The `--plans` mode: after the warm-up, runs each of `names` as a
+    * timed run does and writes its [[planNorm]] text, the text whose
+    * [[sha12]] a timed run records in its `plans` map, to
+    * `outDir/<name>.plan`. A failed query's file holds `ERROR: ` and its
+    * normalized message (raw exception text can embed per-boot tokens
+    * such as temp paths). Two fresh JVMs on unchanged code must write
+    * byte-identical directories; where they differ, the diff names the
+    * leaking token class, which a sha mismatch alone does not. Writes
+    * none of the history artifacts. */
+  private[graft] def dumpPlans(spark: SparkSession, sfDir: String,
+      names: Seq[String], outDir: String): Unit = {
+    val dir = Paths.get(outDir)
+    Files.createDirectories(dir)
+    WarmUp.foreach(materialize(spark, sfDir, _))
+    names.foreach { n =>
+      val text = materialize(spark, sfDir, n).fold("ERROR: " + planNorm(_), _._2)
+      Files.writeString(dir.resolve(n + ".plan"), text + "\n")
+    }
+  }
+
+  /** Whether a full boot at `cpus` executor threads publishes
+    * BENCH_OFFICIAL.json: only at the host's full core count. A
+    * throttled scaling boot (r13's 8 cores on the 32-core host) would
+    * otherwise replace the official number with its own. */
+  private[graft] def writesOfficial(cpus: Int,
+      cores: Int = Runtime.getRuntime.availableProcessors): Boolean =
+    cpus >= cores
+
+  /** `runMain graft.Bench [query...]` times the named queries (all of
+    * them when none is named; only such a full run writes the history
+    * artifacts). `runMain graft.Bench --plans <outDir> [query...]`
+    * writes their plan texts instead ([[dumpPlans]]). Data comes from
+    * `SPARK_GRAFT_SF_DIR`. */
   def main(args: Array[String]): Unit = {
-    // Optional args narrow the run to the named queries (local
-    // iteration); checked before any session starts.
-    val names = SparkEntry.selectQueries(args.toSeq)
+    // Checked before any session starts: a missing path or an unknown
+    // query name fails here.
+    val (plansDir, asked) = args.toSeq match {
+      case "--plans" +: rest =>
+        require(rest.nonEmpty, "usage: Bench --plans <outDir> [query...]")
+        (Some(rest.head), rest.tail)
+      case rest => (None, rest)
+    }
+    val names = SparkEntry.selectQueries(asked)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every core: the brief's bench contract is local[32] on
-    // the 32-thread driver machine, and an unset SPARK_GRAFT_CPUS must
-    // not quietly quarter the executor threads.
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val cpus = GraftSession.cpus
     // Shuffle-file removal is async by default (the ContextCleaner posts
     // a non-blocking delete when a shuffle dependency is GC'd), so a
     // 52-query run can accumulate dead shuffle state faster than the
@@ -514,101 +586,41 @@ object Bench {
     // broadcasts AND shuffle files are actually gone.
     val spark = GraftSession.local(cpus, "graft-bench",
       Map("spark.cleaner.referenceTracking.blocking.shuffle" -> "true"))
-
-    // Peak-heap sampling (r12, VERDICT r11 stretch #8): a third scale
-    // rung is memory-bounded on this box, so the scale artifacts carry
-    // a measured per-kernel peak instead — the first kernel to approach
-    // the 128 GiB bound gets NAMED before it fails. Opt-in via
-    // SPARK_GRAFT_PEAKMEM=1 (subset runs feeding SCALE_SF10.json);
-    // kept out of default lines so history parsers see one format.
-    val samplePeaks = sys.env.get("SPARK_GRAFT_PEAKMEM").contains("1")
-    val peakMb = new java.util.concurrent.atomic.AtomicLong(0L)
-    val peaks = scala.collection.mutable.Map.empty[String, Long]
-    if (samplePeaks) {
-      val t = new Thread(() => {
-        val mx = java.lang.management.ManagementFactory.getMemoryMXBean
-        while (true) {
-          val used = mx.getHeapMemoryUsage.getUsed / (1024 * 1024)
-          peakMb.updateAndGet(p => math.max(p, used))
-          Thread.sleep(100)
-        }
-      }, "graft-peak-sampler")
-      t.setDaemon(true)
-      t.start()
+    val nFail = plansDir match {
+      case Some(dir) => dumpPlans(spark, sfDir, names, dir); 0
+      case None => timedRun(spark, sfDir, cpus, names, full = asked.isEmpty)
     }
+    // Session-close cleanup: drop the session-keyed IVF index tables
+    // (catalog entries + files) this run registered — the accumulation
+    // guard ADVICE r4 asked for.
+    graft.operators.SimilarityOps.dropIvfIndexes(spark)
+    spark.stop()
+    if (nFail > 0) sys.exit(1)
+  }
 
-    def materialize(name: String)
-        : (Either[String, Double], Option[(String, String)]) = {
-      // Untimed cross-query state teardown (VERDICT r2 finding #1: the
-      // driver's 52-query run showed ~3x aggregate inflation vs isolated
-      // runs). Three layers, all deterministic rather than waiting on
-      // the async ContextCleaner:
-      //  1. unpersist every persistent RDD synchronously — frees the
-      //     localCheckpoint blocks queries leave behind (components,
-      //     minhash) instead of letting them squeeze unified execution
-      //     memory for the rest of the suite;
-      //  2. drop any cached relations (none expected — defensive);
-      //  3. GC so the cleaner also reaps shuffle files and broadcast
-      //     blocks whose owners just became unreachable.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
-      // Post-GC reset: the recorded peak attributes THIS query's live
-      // set, not the previous query's dying blocks.
-      if (samplePeaks) peakMb.set(0L)
-      val t0 = System.nanoTime()
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        if (samplePeaks) peaks(name) = peakMb.get()
-        // Fingerprint AFTER the timer stops: executedPlan access is
-        // planning only (the iterative kernels' loops already ran at
-        // construction above — nothing re-executes here). The
-        // normalized TEXT rides along so a never-seen sha can dump
-        // itself (see the variant capture below).
-        val sha =
-          try {
-            val norm = planNorm(df.queryExecution.executedPlan.toString)
-            Some((sha12(norm), norm))
-          }
-          catch { case scala.util.control.NonFatal(_) => None }
-        (Right(t), sha)
-      } catch {
-        case e: Throwable =>
-          (Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(300)),
-            None)
-      }
-    }
-
-    // Warmup: absorb session init + codegen + parquet footer reads for
-    // each table family (fact scan, text+regexp+explode, vector math)
-    // so per-query numbers attribute work, not first-touch JIT.
-    Seq("q02_filter_project", "mr_wordcount", "sim_topk_cosine")
-      .foreach(materialize)
+  /** Times `names` after the warm-up and prints the run's JSON line; a
+    * `full` run also writes the history artifacts. Returns the number
+    * of failed queries. */
+  private def timedRun(spark: SparkSession, sfDir: String, cpus: Int,
+      names: Seq[String], full: Boolean): Int = {
+    WarmUp.foreach(materialize(spark, sfDir, _))
 
     val medians = trailingMedians(sfDir, cpus)
     val results = names.map { n =>
-      val (r, sha) = materialize(n)
+      val run = materialize(spark, sfDir, n)
+      val r = run.map(_._1)
       // Stall self-adjudication (VERDICT r7 #1): one in-boot re-run
       // when the measurement blows its trailing-round band.
       val retry = r match {
         case Right(t) if t >= StallFloorSec
             && medians.get(n).exists(m => t > StallFactor * m) =>
-          Some(materialize(n)._1)
+          Some(materialize(spark, sfDir, n).map(_._1))
         case _ => None
       }
-      (n, r, sha, retry)
+      (n, r, run.toOption.map { case (_, norm) => (sha12(norm), norm) }, retry)
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    import SparkEntry.{jsonString => jstr}
     // Millisecond precision: sub-ms digits are timer noise and the
     // driver keeps only the TAIL of the build log — BENCH_r03's 3.5 KB
     // line lost its leading '{"metric":"total",...' to the cut, leaving
@@ -629,10 +641,10 @@ object Bench {
     // by the time anyone investigates, the boot that produced it is
     // gone (src_bloom_prune flapped between two recurring shas for two
     // rounds with only ONE variant's text ever captured, because
-    // isolated PlanDump boots reproduce just one of them). Full runs
+    // isolated `--plans` boots reproduce just one of them). Full runs
     // append every never-seen variant to PLAN_VARIANTS.jsonl so the
     // flip documents itself the moment it happens.
-    if (args.isEmpty) {
+    if (full) {
       val window = historyPlans(sfDir, cpus).takeRight(MedianWindow)
       val seen: Map[String, Set[String]] = window.flatMap(_.toSeq)
         .groupBy(_._1).map { case (q, kv) => q -> kv.map(_._2).toSet }
@@ -642,10 +654,8 @@ object Bench {
       // capture exists to preserve — but only once per variant.
       val dumped: Set[(String, String)] =
         try {
-          import scala.jdk.CollectionConverters._
           val re = "\"q\":\"([^\"]+)\",\"sha\":\"([0-9a-f]{12})\"".r
-          java.nio.file.Files.readAllLines(
-              java.nio.file.Paths.get("PLAN_VARIANTS.jsonl"))
+          Files.readAllLines(Paths.get("PLAN_VARIANTS.jsonl"))
             .asScala.flatMap(l => re.findFirstMatchIn(l)
               .map(m => (m.group(1), m.group(2)))).toSet
         } catch { case _: java.io.IOException => Set.empty }
@@ -656,11 +666,8 @@ object Bench {
           s"""{"q":${jstr(k)},"sha":${jstr(sha)},"norm":${jstr(norm)}}"""
       }
       if (novel.nonEmpty)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get("PLAN_VARIANTS.jsonl"),
-          novel.mkString("", "\n", "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
+        Files.writeString(Paths.get("PLAN_VARIANTS.jsonl"),
+          novel.mkString("", "\n", "\n"), CREATE, APPEND)
     }
     val retries = results.collect {
       case (k, Right(t), _, Some(rr)) =>
@@ -671,32 +678,20 @@ object Bench {
     val total = results.collect { case (_, Right(s), _, _) => s }.sum
     val head = gitHead()
     val srcH = srcTreeHash()
-    // Present only under SPARK_GRAFT_PEAKMEM=1 (scale-rung subset
-    // runs): per-query peak JVM heap in MB, sampled at 10 Hz.
-    val peaksField =
-      if (samplePeaks)
-        peaks.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jstr(k)}:$v" }
-          .mkString(""","peaks_mb":{""", ",", "}")
-      else ""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"failed":$nFail,"errors":$errs,"retries":$retries,"plans":$plans$peaksField,"head":${jstr(head)},"src":${jstr(srcH)},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"failed":$nFail,"errors":$errs,"retries":$retries,"plans":$plans,"head":${jstr(head)},"src":${jstr(srcH)},"sf":${jstr(sfDir)}}"""
     // BENCH_LOCAL.json is the AUTHORITATIVE full-loop artifact (VERDICT
     // r4 #7) — a subset iteration run must not clobber it (an r6 `git
     // add -A` briefly committed a one-query file over the official
     // line before this guard existed).
-    if (args.isEmpty) {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-        (line + "\n").getBytes("UTF-8"))
+    if (full) {
+      Files.writeString(Paths.get("BENCH_LOCAL.json"), line + "\n")
       // Append to the rolling history so the NEXT run's stall trigger
       // has this boot in its trailing-median window.
-      java.nio.file.Files.write(java.nio.file.Paths.get(HistoryPath),
-        (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      Files.writeString(Paths.get(HistoryPath), line + "\n", CREATE, APPEND)
     }
     println(line)
-    if (args.isEmpty) {
+    if (full && writesOfficial(cpus)) {
       // OFFICIAL artifact (VERDICT r10 #2): per-query medians over the
       // same-HEAD, same-sf trailing boots INCLUDING the line just
       // appended. "value" is the sum of per-query medians — each
@@ -738,19 +733,12 @@ object Bench {
         // window).
         val compact =
           s"""{"metric":"official_median","value":${fmt(offTotal)},"unit":"sec","cpus":$cpus,"boots":${totals.size},"boot_total":${fmt(total)},"spread":$spread,"failed":$nFail,"n_short":${counts.count(_._2 < totals.size)},"queries_file":"BENCH_LOCAL.json","official_file":"BENCH_OFFICIAL.json","head":${jstr(head)},"src":${jstr(srcH)},"sf":${jstr(sfDir)}}"""
-        val full =
+        val official =
           s"""{"metric":"official_median","value":${fmt(offTotal)},"unit":"sec","cpus":$cpus,"boots":${totals.size},"boot_totals":$bootsJson,"spread":$spread,"failed":$nFail,"short_basis":$short,"head":${jstr(head)},"src":${jstr(srcH)},"sf":${jstr(sfDir)},"queries":$medQs}"""
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get("BENCH_OFFICIAL.json"),
-          (full + "\n").getBytes("UTF-8"))
+        Files.writeString(Paths.get("BENCH_OFFICIAL.json"), official + "\n")
         println(compact)
       }
     }
-    // Session-close cleanup: drop the session-keyed IVF index tables
-    // (catalog entries + files) this run registered — the accumulation
-    // guard ADVICE r4 asked for.
-    graft.operators.SimilarityOps.dropIvfIndexes(spark)
-    spark.stop()
-    if (nFail > 0) sys.exit(1)
+    nFail
   }
 }

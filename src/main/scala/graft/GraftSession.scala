@@ -18,6 +18,12 @@ import org.apache.spark.sql.SparkSession
   * ([[Tables.schemaOf]]).
   */
 object GraftSession {
+  /** Executor threads for a dev main: `SPARK_GRAFT_CPUS`, else every
+    * core the JVM sees (an unset variable must not quietly cut the
+    * threads of a wide host). */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def local(threads: Int = 4, appName: String = "graft",
       extraConf: Map[String, String] = Map.empty): SparkSession = {
     val builder = SparkSession

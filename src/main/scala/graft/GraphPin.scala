@@ -357,9 +357,7 @@ object GraphPin {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val tol = args.lift(1).map(_.toDouble).getOrElse(0.05)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = GraftSession.local(cpus, "graft-graphpin")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-graphpin")
     val r = check(spark, dir, tol)
     println(
       s"""{"graphpin":"ok","dir":"$dir","pr_vertices":${r.prVertices},""" +

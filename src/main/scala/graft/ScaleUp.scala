@@ -27,9 +27,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = GraftSession.local(cpus, "graft-scaleup")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-scaleup")
     val t = Tables(spark, src)
 
     def off(df: DataFrame, key: String): Long =

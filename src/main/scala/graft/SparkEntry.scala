@@ -28,7 +28,8 @@ object SparkEntry {
     * registered query when none is asked. A typo must fail loudly
     * (ADVICE r9): a silently dropped name runs a smaller set than
     * asked — an empty bench run, or a missing .plan file that makes
-    * PlanDump's two-boot diff vacuously pass for that query. */
+    * the two-boot plan diff (`Bench --plans`) vacuously pass for that
+    * query. */
   private[graft] def selectQueries(asked: Seq[String]): Seq[String] = {
     val unknown = asked.filterNot(queries.contains)
     require(unknown.isEmpty,
@@ -36,6 +37,19 @@ object SparkEntry {
         "check SparkEntry.queries keys")
     (if (asked.isEmpty) queries.keys.toSeq else asked).sorted
   }
+
+  /** A JSON string literal: escapes backslash, quote and every control
+    * character (<0x20). A tab or CR in an oracle's SQL would otherwise
+    * make the correctness compare's `json.load` fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -8,9 +8,7 @@ object Verify {
     // Optional extra args narrow the dump to the named queries; an
     // unknown name fails here, before a session starts.
     val only = SparkEntry.selectQueries(args.drop(2).toSeq).toSet
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = GraftSession.local(cpus, "graft-verify")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-verify")
     // Pin the run-captured oracle (sim_ann_kmeans_par) to THIS dir's
     // anchors: the dump below must carry the anchor set the dumped
     // parquet used even if another dir ran in this JVM (ADVICE r11).
@@ -29,20 +27,9 @@ object Verify {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import SparkEntry.jsonString
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

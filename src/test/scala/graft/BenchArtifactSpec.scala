@@ -201,7 +201,47 @@ class BenchArtifactSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       Bench.main(Array("q01_pricing_summary", "no_such_query")))
     assert(e.getMessage.contains("no_such_query"))
+    val out = java.nio.file.Files.createTempDirectory("graft_plans_").resolve("out")
+    val ep = intercept[IllegalArgumentException](
+      Bench.main(Array("--plans", out.toString, "q01_pricing_summary", "no_such_query")))
+    assert(ep.getMessage.contains("no_such_query"))
+    assert(!java.nio.file.Files.exists(out), "Bench --plans wrote output for a run it should refuse")
+    java.nio.file.Files.delete(out.getParent)
+    val eu = intercept[IllegalArgumentException](Bench.main(Array("--plans")))
+    assert(eu.getMessage.contains("--plans <outDir>"))
     assert(!spark.sparkContext.isStopped, "Bench stopped the session")
+  }
+
+  test("Bench --plans writes each query's fingerprinted plan text and no history artifact") {
+    val artifacts = Seq("BENCH_LOCAL.json", Bench.HistoryPath, "PLAN_VARIANTS.jsonl",
+      "BENCH_OFFICIAL.json").map(java.nio.file.Paths.get(_))
+    def snapshot() = artifacts.map(p =>
+      if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readAllBytes(p).toSeq) else None)
+    val before = snapshot()
+    val names = Seq("q01_pricing_summary", "q03_shipping_priority")
+    val out = java.nio.file.Files.createTempDirectory("graft_plans_")
+    try {
+      Bench.dumpPlans(spark, sf, names, out.toString)
+      assert(out.toFile.list().toSeq.sorted == names.map(_ + ".plan"))
+      names.foreach { n =>
+        val text = java.nio.file.Files.readString(out.resolve(n + ".plan"))
+        assert(text.endsWith("\n") && !text.startsWith("ERROR: "), s"$n: $text")
+        // The sha a timed run records: the same query, run the same
+        // way, fingerprinted after its run.
+        val df = SparkEntry.queries(n)(spark, sf)
+        df.write.format("noop").mode("overwrite").save()
+        assert(Bench.sha12(text.dropRight(1)) ==
+          Bench.planSha(df.queryExecution.executedPlan.toString), n)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+    assert(snapshot() == before, "a --plans run changed a history artifact")
+  }
+
+  test("only a boot at the host's full core count writes BENCH_OFFICIAL.json") {
+    assert(Bench.writesOfficial(cpus = 32, cores = 32))
+    assert(Bench.writesOfficial(cpus = 4, cores = 4))
+    assert(!Bench.writesOfficial(cpus = 8, cores = 32), "a throttled scaling boot")
+    assert(Bench.writesOfficial(cpus = 8, cores = 4), "an oversubscribed boot is not throttled")
   }
 
   test("Verify fails loudly on an unknown query name, before a session starts") {
@@ -496,7 +536,7 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(moved.isEmpty,
       s"${moved.size} queries' plan shas are UNSEEN in the trailing " +
         s"window: ${moved.take(10).mkString(", ")} — either a plan " +
-        "regression or a normalizer leak; diagnose with graft.PlanDump " +
+        "regression or a normalizer leak; diagnose with `graft.Bench --plans` " +
         "and either fix or allowlist with a reason")
     assert(shared.size > 100, s"comparison degenerate: ${shared.size} shared")
   }
