@@ -36,6 +36,11 @@ import org.apache.spark.sql.SparkSession
   *  - `"plans"`: a normalized fingerprint (md5/12) of each query's
   *    executedPlan string, captured AFTER its timed run (planning
   *    only — never inside the timer, never re-running construction).
+  *    It is the INITIAL adaptive plan (`AdaptiveSparkPlan
+  *    isFinalPlan=false`): the timed `noop` write runs a
+  *    QueryExecution of its own, so the frame's `executedPlan` is
+  *    never executed, and what AQE changes at run time (coalescing,
+  *    skew splits, join demotions) never reaches the sha.
   *    Expression ids / plan ids / paths are stripped so the sha is
   *    stable across boots on unchanged code: a cross-round time delta
   *    with equal shas is host variance, with differing shas a plan
@@ -497,8 +502,10 @@ object Bench {
   private val WarmUp = Seq("q02_filter_project", "mr_wordcount", "sim_topk_cosine")
 
   /** Runs query `name` once through the `noop` sink after an untimed
-    * teardown. Returns its seconds and normalized executedPlan text, or
-    * the message of what stopped it. */
+    * teardown. Returns its seconds and the normalized text of the
+    * frame's executedPlan, or the message of what stopped it. That plan
+    * is the initial adaptive one (`isFinalPlan=false`): the `noop`
+    * write plans and runs a QueryExecution of its own. */
   private def materialize(spark: SparkSession, sfDir: String, name: String)
       : Either[String, (Double, String)] = {
     // Untimed cross-query state teardown (VERDICT r2 finding #1: the

@@ -2,7 +2,10 @@ package graft
 
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
+
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
 
 /** Tuned local SparkSession factory.
   *
@@ -16,8 +19,13 @@ import org.apache.spark.sql.SparkSession
   * classloader, so a rerun reuses its generated code (artifact
   * isolation off), and table reads name a cached schema
   * ([[Tables.schemaOf]]).
+  *
+  * Local files are written without process forks: the `file:` scheme
+  * is served by [[NioLocalFileSystem]] and [[NioLocalFs]], which set
+  * permissions and read link status through java.nio where Hadoop,
+  * without its native library, runs `chmod` and `readlink`.
   */
-object GraftSession {
+object GraftSession extends Logging {
   /** Executor threads for a dev main: `SPARK_GRAFT_CPUS`, else every
     * core the JVM sees (an unset variable must not quietly cut the
     * threads of a wide host). */
@@ -26,6 +34,13 @@ object GraftSession {
 
   def local(threads: Int = 4, appName: String = "graft",
       extraConf: Map[String, String] = Map.empty): SparkSession = {
+    // "Unable to load native-hadoop library", written while the
+    // SparkContext starts: with `file:` served through java.nio below,
+    // nothing graft runs needs Hadoop's native IO. Spark's logging is
+    // set up first, because that replaces the log4j configuration and
+    // with it a level set before.
+    initializeLogIfNecessary(false)
+    Configurator.setLevel("org.apache.hadoop.util.NativeCodeLoader", Level.ERROR)
     val builder = SparkSession
       .builder()
       .withExtensions(new GraftExtensions()(_))
@@ -80,6 +95,10 @@ object GraftSession {
       // graft adds no session artifacts, so nothing relies on isolation.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // Both ways Spark reaches `file:`: FileSystem (parquet parts,
+      // table writes, staging) and FileContext (stream checkpoints).
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
     val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -498,10 +498,11 @@ class BenchArtifactSpec extends AnyFunSuite {
     // regression or a new normalizer leak class, both of which must
     // fail the suite the round they appear.
     // Membership is checked against the TRAILING WINDOW (the medians
-    // window), not only the immediately-previous line: AQE's final
-    // executed plan is load-adaptive by design (a contended boot can
-    // legitimately split/coalesce differently), so a sha REVERTING to
-    // a recently-seen value is not a regression. A sha nobody in the
+    // window), not only the immediately-previous line: a sha
+    // REVERTING to a recently-seen value is not a regression. (The
+    // sha is of the initial AQE plan, `isFinalPlan=false`, so run-time
+    // splits and coalescing never move it; reverts seen so far were
+    // normalizer leaks, like the one below.) A sha nobody in the
     // window has seen still fails — that is the signature of both a
     // plan regression and a new leak class. (The ev_range_join flip
     // seen since r10, d11a192f34cc <-> 4d0aa75c366b, was not a replan:
